@@ -7,13 +7,15 @@ the driver's DuckDB-oracle correctness gate.
 
 from __future__ import annotations
 
+import os
 import sys
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+_ROOT = os.path.dirname(os.path.abspath(__file__))
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 from gcp_healthcare_data_pipeline_spark.queries import all_queries  # noqa: E402
 

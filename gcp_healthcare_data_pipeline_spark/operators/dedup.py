@@ -69,9 +69,9 @@ def lsh_params(
     """Corpus-adaptive LSH shape ``(rows_per_band, bands, k)``.
 
     With FIXED band width r, random (non-near-dup) band collisions grow
-    ~ n^2 * p_sig^r — measured directly by ``tools/scaling_audit.py
-    --pairs``, which showed pairs-per-doc growing 6.7x on a 10x corpus
-    step at the old fixed (r=2, b=6). Standard LSH theory fixes this by
+    ~ n^2 * p_sig^r — a direct count of the candidate pairs showed
+    pairs-per-doc growing 6.7x on a 10x corpus step at the old fixed
+    (r=2, b=6). Standard LSH theory fixes this by
     growing the band width logarithmically with the corpus:
 
     - ``r = clamp(ceil(log10(n)) - 1, 2, 4)`` — each 10x of corpus adds
@@ -244,9 +244,9 @@ def fastss_candidate_pairs(
     shorter string). Each neighborhood includes the string itself
     (i = length deletes nothing).
 
-    This is THE candidate space for q_fuzzy_name_match, q_golden_record
-    AND the ``tools/scaling_audit.py --pairs`` gate — one definition, so
-    the audited pair space can never drift from the production one.
+    This is THE candidate space for q_fuzzy_name_match and
+    q_golden_record — one definition, so the pair counts recorded in
+    SCALING_r10.md §2 measured the production space.
 
     Scale shape: O(n * len) variant rows with near-unique keys (no hot
     key, unlike length-blocking on fixed-width names); the expensive

@@ -417,9 +417,8 @@ def _curation_stage_frames(
     """The pipeline's stage frames, in order: ('ingest', d0) through
     ('temperature_mix', s10), then the two manifest frames ('packing',
     packs) and ('export', shards). Factored from q_curation_pipeline so
-    tools/curation_profile.py can time each stage's MARGINAL cost (the
-    SCALING note's which-stage-dominates question) against the exact
-    production frames."""
+    each stage's MARGINAL cost can be timed against the exact production
+    frames (the per-stage table in SCALING_r17.md §2)."""
     from gcp_healthcare_data_pipeline_spark.operators.dedup import (  # noqa: PLC0415
         band_keys as _band_keys,
     )

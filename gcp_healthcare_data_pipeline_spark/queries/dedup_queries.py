@@ -35,9 +35,7 @@ from gcp_healthcare_data_pipeline_spark.session import load_tables
 _JACCARD_THRESHOLD = 0.6
 _DF_CAP = 50  # n-gram inverted-index document-frequency cap
 # pairs must share at least this many rare shingles to be scored; the
-# df-cap recall probe (tools/scaling_audit.py --text-cell) re-builds the
-# same pipeline and MUST use this constant, never a literal — otherwise
-# the probe silently measures a different pipeline when this changes
+# df-cap's recall cost at these settings is recorded in SCALING_r16.md §2
 _MIN_SHARED_SHINGLES = 5
 
 # Both near-dup paths (minhash-LSH and n-gram inverted index) start from
@@ -199,7 +197,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     with log10(n) to pin the random-collision rate, band count grows to
     hold recall >= 0.9 at the 0.6 threshold — at fixed (r=2, b=6) the
     candidate-pair space measured 6.7x per-doc growth on a 10x corpus
-    step (tools/scaling_audit.py --pairs), the one curve that would
+    step (SCALING_r10.md §2), the one curve that would
     have gone quadratic at 100 TB."""
     key = (spark.sparkContext.applicationId, sf_dir)
     cached = _PAIR_CACHE.get(key)
@@ -389,7 +387,7 @@ def _incremental_band_candidates(
 ) -> DataFrame:
     """(doc_id, corpus_id): distinct asymmetric batch-vs-corpus LSH
     band-join candidates (batch = ``doc_id % 10 == 0``) — the candidate
-    space the ``tools/scaling_audit.py --pairs`` gate measures. Since
+    space whose growth SCALING_r10.md §2 records. Since
     r17, q_dedup_incremental sources the SAME candidate space from the
     loaded standing band table (``_dedup_screen``); the band-key
     construction is shared (``band_keys`` + ``_corpus_lsh_params``), so

@@ -1017,9 +1017,8 @@ _PMI_MIN_PAIR = 5  # doc-cooccurrence floor to report a pair
 def _pmi_doc_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, arr): each document's sorted distinct IN-VOCAB token set
     (vocab = min-df-capped). The downstream a<b fan-out is C(|arr|, 2)
-    per doc — THE pair space counted by ``tools/scaling_audit.py
-    --pairs``; q_pmi_collocations and the audit share this definition so
-    the gate can never drift from production.
+    per doc — THE pair space whose growth SCALING_r12.md §8 records for
+    q_pmi_collocations.
 
     Plan shape (r12): exploded tokens BROADCAST-HASH-JOIN the vocab
     table — O(1) per token occurrence — then one groupBy(doc_id)

@@ -132,7 +132,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via deterministic random-hyperplane LSH buckets.
 
     The scale path: each query scores only its buckets. Config chosen by
-    measurement (tools/lsh_recall.py, sf0.1 vs brute force): 4 tables x
+    measurement (recall against brute_force_topk at sf0.1): 4 tables x
     4 bits with hamming-2 query-side multiprobe = 100/100 recall at no
     extra wall-clock vs the round-1 3x4/hamming-1 config (88/100) — the
     probe expansion rides the tiny broadcast query side, the corpus still
@@ -1081,7 +1081,7 @@ _TARGET_BLOCK_FLOATS = 16384
 # keeps the within-cluster self-joins bounded (~256-row blocks) but a
 # FLAT broadcast nearest-centroid assignment is n x k ~ n^2/256 —
 # quadratic, invisible at 2k-20k vectors, measured directly by the 100x
-# blow-up probe (tools/scaling_audit.py --third-step, round 11:
+# blow-up probe (SCALING_r11.md §4:
 # q_semdedup ~40.6x on the 10x->100x step). Round 12 replaced the flat
 # assignment with the two-level hierarchy above (n*2*sqrt(k) =
 # n^1.25/8 folds for k = n/256 — at 200k vectors that is ~11M folds vs
@@ -1243,9 +1243,8 @@ def _seed_centroids(emb: DataFrame) -> DataFrame:
     (per-source id ranges, time-ordered corpora): every seed landed in
     one region, Lloyd collapsed the far mass into one cluster, and the
     within-cluster self-join went quadratic — measured as a 307x
-    runtime ratio on a 10x corpus step by ``tools/scaling_audit.py
-    --second-step`` before this change (vs 3.4x after — the committed
-    SCALING_r10.md run).
+    runtime ratio on a 10x corpus step before this change (vs 3.4x
+    after — SCALING_r10.md §3).
 
     Execution shape: rank only the narrow (vec_id, hash) projection
     (the one shuffle, k tiny sorted groups), then broadcast the k
@@ -1374,7 +1373,7 @@ def _kmeans_assign(
     centroid-side aggregations (bucket winners, the 1-row super pack,
     the child-map groupBy). Distance-fold count is unchanged
     (n*m + n*k/m); what disappears is the data movement. Measured
-    (tools/profile_query.py, sf0.1, runs=3): q_semdedup 7.4 -> 5.6 s,
+    (sf0.1, construct + count, three runs): q_semdedup 7.4 -> 5.6 s,
     and the two corpus-scale window exchanges per assignment pass are
     gone from every consumer's plan."""
     # both the super seeding and the child map traverse the centroid
@@ -1898,7 +1897,7 @@ def _hier_assign_sql_sharded(cent: str, out: str, p: str) -> str:
     the Spark loop executes, because every id lives in one shard.
     Requires CTEs ``es`` (shard_id, vec_id, v) and ``sst2``
     (shard_id, k_s, m_s) in scope."""
-    return f"""{p}sup AS (
+    return f"""{p}sup AS MATERIALIZED (
   SELECT shard_id, centroid_id AS super_id, c AS sc FROM (
     SELECT t.shard_id, t.centroid_id, t.c, ROW_NUMBER() OVER (
       PARTITION BY t.shard_id, t.h % st.m_s
@@ -1907,7 +1906,7 @@ def _hier_assign_sql_sharded(cent: str, out: str, p: str) -> str:
       ('0x' || substr(md5(CAST(centroid_id AS VARCHAR)), 1, 12))::BIGINT AS h
       FROM {cent}) t JOIN sst2 st USING (shard_id)) _r
   WHERE rn = 1
-), {p}cmap AS (
+), {p}cmap AS MATERIALIZED (
   -- self-preference tie-break: see _hier_assign_sql's cmap
   SELECT shard_id, centroid_id, c, super_id FROM (
     SELECT k.shard_id, k.centroid_id, k.c, s.super_id,
@@ -1916,13 +1915,13 @@ def _hier_assign_sql_sharded(cent: str, out: str, p: str) -> str:
           CASE WHEN s.super_id = k.centroid_id THEN 0 ELSE 1 END ASC,
           s.super_id ASC) AS rn
     FROM {cent} k JOIN {p}sup s ON s.shard_id = k.shard_id) _r WHERE rn = 1
-), {p}vsup AS (
+), {p}vsup AS MATERIALIZED (
   SELECT shard_id, vec_id, v, super_id FROM (
     SELECT e.shard_id, e.vec_id, e.v, s.super_id,
       ROW_NUMBER() OVER (PARTITION BY e.vec_id
         ORDER BY {_km_dist_sql("e.v", "s.sc")} ASC, s.super_id ASC) AS rn
     FROM es e JOIN {p}sup s ON s.shard_id = e.shard_id) _r WHERE rn = 1
-), {out} AS (
+), {out} AS MATERIALIZED (
   SELECT shard_id, vec_id, v, centroid_id, dist FROM (
     SELECT w.shard_id, w.vec_id, w.v, m.centroid_id,
       {_km_dist_sql("w.v", "m.c")} AS dist,
@@ -1942,17 +1941,17 @@ def _sharded_kmeans_sql() -> str:
     of whether the shard key is a hash split (q_semdedup_sharded) or a
     semantic coarse route (q_knn_graph_sharded). One definition so the
     two sharded oracles can never drift."""
-    return f"""sst AS (
+    return f"""sst AS MATERIALIZED (
   -- per-shard k (dim-aware block), twin of _derived_k on each shard
   SELECT shard_id,
     GREATEST({_KMEANS_K_MIN},
       CAST(CEIL(COUNT(*) / {_BLOCK_SQL}) AS BIGINT)) AS k_s
   FROM es GROUP BY 1
-), sst2 AS (
+), sst2 AS MATERIALIZED (
   SELECT shard_id, k_s,
     GREATEST(1, CAST(CEIL(SQRT(k_s)) AS BIGINT)) AS m_s
   FROM sst
-), sc0 AS (
+), sc0 AS MATERIALIZED (
   -- per-shard hash-stratified seeds, twin of _seed_centroids per shard
   SELECT shard_id, vec_id AS centroid_id, v AS c FROM (
     SELECT t.shard_id, t.vec_id, t.v, ROW_NUMBER() OVER (
@@ -1961,60 +1960,60 @@ def _sharded_kmeans_sql() -> str:
       ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT AS h
       FROM es) t JOIN sst2 st USING (shard_id)) _r
   WHERE rn = 1
-), {_hier_assign_sql_sharded("sc0", "sa1", "g1")}, sd1 AS (
+), {_hier_assign_sql_sharded("sc0", "sa1", "g1")}, sd1 AS MATERIALIZED (
   SELECT shard_id, centroid_id, i AS pos, AVG(v[i]) AS cval
   FROM sa1, UNNEST(range(1, len(v) + 1)) AS t(i)
   GROUP BY 1, 2, 3
-), sc1 AS (
+), sc1 AS MATERIALIZED (
   SELECT shard_id, centroid_id, list(cval ORDER BY pos) AS c
   FROM sd1 GROUP BY 1, 2
 ), {_hier_assign_sql_sharded("sc1", "sa2", "g2")}"""
 
 
 _ORACLE_SEMDEDUP_SHARDED = f"""
-WITH e AS (
+WITH e AS MATERIALIZED (
   SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
-), es AS (
+), es AS MATERIALIZED (
   -- twin of shard_vectors(n_shards={_SHARD_TEST_SHARDS})
   SELECT vec_id, v,
     ('0x' || substr(md5(CAST(vec_id AS VARCHAR)), 1, 12))::BIGINT
       % {_SHARD_TEST_SHARDS} AS shard_id
   FROM e
-), {_sharded_kmeans_sql()}, spairs AS (
+), {_sharded_kmeans_sql()}, spairs AS MATERIALIZED (
   -- cluster ids are member vec_ids, so the centroid equi-join is
   -- automatically within-shard
   SELECT b.vec_id AS id_drop, a.vec_id AS id_keep, a.v AS qv, b.v AS cv
   FROM sa2 a JOIN sa2 b
     ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-), sscored AS (
+), sscored AS MATERIALIZED (
   SELECT id_drop, id_keep, {_COS_SQL} AS cos_sim FROM spairs
-), sdrops AS (
+), sdrops AS MATERIALIZED (
   SELECT id_drop, id_keep AS duplicate_of, cos_sim FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY id_drop
       ORDER BY id_keep ASC) AS rn
     FROM sscored WHERE cos_sim >= {_SEMDEDUP_THR}) _x
   WHERE rn = 1
-), e2 AS (
+), e2 AS MATERIALIZED (
   -- survivors of every per-shard pass
   SELECT vec_id, v FROM es
   WHERE vec_id NOT IN (SELECT id_drop FROM sdrops)
 ), {_c0_sql("e2", "rc0")}, {_hier_assign_sql("rc0", "ra1", "r1", "e2")},
-rd1 AS (
+rd1 AS MATERIALIZED (
   SELECT centroid_id, i AS pos, AVG(v[i]) AS cval
   FROM ra1, UNNEST(range(1, len(v) + 1)) AS t(i)
   GROUP BY 1, 2
-), rc1 AS (
+), rc1 AS MATERIALIZED (
   SELECT centroid_id, list(cval ORDER BY pos) AS c FROM rd1 GROUP BY 1
-), {_hier_assign_sql("rc1", "ra2", "r2", "e2")}, rpairs AS (
+), {_hier_assign_sql("rc1", "ra2", "r2", "e2")}, rpairs AS MATERIALIZED (
   SELECT b.vec_id AS id_drop, a.vec_id AS id_keep, a.v AS qv, b.v AS cv
   FROM ra2 a JOIN ra2 b
     ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
   JOIN es sa ON sa.vec_id = a.vec_id
   JOIN es sb ON sb.vec_id = b.vec_id
   WHERE sa.shard_id <> sb.shard_id
-), rscored AS (
+), rscored AS MATERIALIZED (
   SELECT id_drop, id_keep, {_COS_SQL} AS cos_sim FROM rpairs
-), rdrops AS (
+), rdrops AS MATERIALIZED (
   SELECT id_drop, id_keep AS duplicate_of, cos_sim FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY id_drop
       ORDER BY id_keep ASC) AS rn
@@ -2092,9 +2091,9 @@ def _semdedup_incremental_parts(
 ) -> "tuple[DataFrame, DataFrame]":
     """(batch_assigned, survivors) — the STANDING-STATE stages of the
     incremental semantic screen, shared by q_semdedup_incremental and
-    the ``tools/scaling_audit.py --pairs`` delta-cost probe (one
-    definition, so the audited candidate space can never drift from the
-    production one; same discipline as _incremental_band_candidates).
+    the delta-cost probe of SCALING_r14.md §4 (one definition, so the
+    measured candidate space is the production one; same discipline as
+    _incremental_band_candidates).
 
     Standing state = :func:`_incremental_standing_assigned` plus the
     corpus SURVIVOR set (:func:`_semdedup_survivors`) a production
@@ -2737,8 +2736,7 @@ def _pq_codebook_and_codes(
     into the average, a corpus x subs x dims shuffle to fit a
     constant-size codebook (r14 verdict item 3); standard practice
     (and the 100 TB shape) is train-on-sample, encode-everything, with
-    shortlist recall measured by ``tools/scaling_audit.py --pq-cell``.
-    Factored so that cell measures the exact production build."""
+    shortlist recall recorded in SCALING_r14.md §6 and SCALING_r15.md §2."""
     from gcp_healthcare_data_pipeline_spark.operators.similarity import (
         hash_stratified_winners,
     )
@@ -2795,8 +2793,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     data touched than brute force; composing it with the IVF router
     (operators/similarity.py:ivf_topk) to scan only probed clusters'
     codes is the standard IVF-PQ production pairing, and the recall/
-    compression trade is measured by ``tools/scaling_audit.py
-    --pq-cell``."""
+    compression trade is recorded in SCALING_r14.md §6."""
     emb = (
         load_tables(spark, sf_dir, "embeddings")
         .select("vec_id", as_double("embedding").alias("v"))

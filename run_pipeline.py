@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import argparse
 import json
+import os
 import sys
 from datetime import datetime
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from gcp_healthcare_data_pipeline_spark.pipeline.runner import (  # noqa: E402
     Runner,

@@ -1,13 +1,13 @@
 """bench.py aggregate_runs — the pure median-of-N artifact logic
-(r15 verdict item 4). Same discipline as tools/stream_overhead.py's
-envelope_breaches: the gate math is a plain function a unit test can
-hold still while the harness around it evolves."""
+(r15 verdict item 4). The aggregation math is a plain function a unit
+test can hold still while the harness around it evolves."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import aggregate_runs  # noqa: E402
 

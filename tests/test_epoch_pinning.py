@@ -14,11 +14,12 @@ the shape's derivation point by a full decade.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
 
 from check import duck_con, normalize  # noqa: E402
 

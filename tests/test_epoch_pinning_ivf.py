@@ -18,11 +18,12 @@ shape's derivation point.
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
 
 from check import duck_con, normalize  # noqa: E402
 

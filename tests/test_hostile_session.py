@@ -15,11 +15,12 @@ composite that share the banding code path.
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.join(os.path.dirname(__file__), os.pardir, "tools"))
 
 from check import duck_con, normalize  # noqa: E402
 

@@ -1,115 +1,104 @@
-"""Unit tests for the pure gate logic in the round-artifact tools.
+"""Tests for ``tools/measure.py``: the A/B aggregation (pure, no Spark)
+and one ``profile`` run end to end in its own process."""
 
-These gates decide exit codes for round artifacts (STREAM_OVERHEAD.md,
-SCALING_r*.md); their arithmetic must be testable without a Spark
-session or a 12-minute measurement run.
-"""
-
+import json
+import os
+import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 
-from stream_overhead import (  # noqa: E402
-    ENVELOPE_MARGIN,
-    ENVELOPE_MED_S,
-    ENVELOPE_SLACK_S,
-    envelope_breaches,
-)
+import pytest  # noqa: E402
+from measure import PROFILE_FIELDS, ab_summary, copy_levels  # noqa: E402
 
 
-def test_envelope_recorded_medians_pass():
-    """The recorded medians themselves are green by construction."""
-    assert envelope_breaches(dict(ENVELOPE_MED_S)) == []
-
-
-def test_envelope_margin_and_slack():
-    """Bound is median * 1.5 + 1.0 s: just-below passes, above breaches
-    and the message names the stream and both sides of the comparison."""
-    name = "q_stream_scd2"
-    rec = ENVELOPE_MED_S[name]
-    bound = rec * ENVELOPE_MARGIN + ENVELOPE_SLACK_S
-    ok = dict(ENVELOPE_MED_S)
-    ok[name] = bound - 0.01
-    assert envelope_breaches(ok) == []
-    bad = dict(ENVELOPE_MED_S)
-    bad[name] = bound + 0.01
-    (msg,) = envelope_breaches(bad)
-    assert name in msg and f"{bound:.2f}" in msg
-
-
-def test_envelope_detects_median_regression_class():
-    """The motivating case: a genuine ~2.2x median regression on a
-    sub-2 s stream must breach (the old max-based bound needed 8.5x)."""
-    bad = dict(ENVELOPE_MED_S)
-    bad["q_stream_scd2"] = ENVELOPE_MED_S["q_stream_scd2"] * 2.2
-    assert envelope_breaches(bad)
-
-
-def test_envelope_unknown_stream_is_a_breach():
-    """A new stream without a recorded envelope fails loudly instead of
-    silently passing ungated."""
-    m = dict(ENVELOPE_MED_S)
-    m["q_stream_new_thing"] = 0.1
-    assert any("q_stream_new_thing" in b for b in envelope_breaches(m))
-
-
-def test_envelope_missing_stream_is_a_breach():
-    """The reverse direction: a recorded stream absent from the fresh
-    run (registry typo, rotation edit) breaches — measuring 11 of 12
-    streams must not exit green."""
-    m = dict(ENVELOPE_MED_S)
-    dropped = "q_stream_scd2"
-    del m[dropped]
-    breaches = envelope_breaches(m)
-    assert any(dropped in b and "absent" in b for b in breaches)
-
-
-from scaling_audit import classify_pair_growth  # noqa: E402
-
-
-def _gate(p_small, d_small, p_big, d_big):
-    return classify_pair_growth(
-        p_small, d_small, p_big, d_big,
-        watch_threshold=1.5, fail_threshold=12.0,
+def test_ab_medians_ratios_and_geomean():
+    s = ab_summary(
+        {"q_a": [2.0, 4.0, 3.0], "q_b": [1.0]},
+        {"q_a": [1.5, 1.4, 1.6], "q_b": [2.0, 2.0]},
     )
+    assert s["base_median_sec"] == {"q_a": 3.0, "q_b": 1.0}
+    assert s["head_median_sec"] == {"q_a": 1.5, "q_b": 2.0}
+    assert s["ratio_head_over_base"] == {"q_a": 0.5, "q_b": 2.0}
+    assert s["n_common"] == 2
+    assert s["geomean_ratio"] == 1.0  # sqrt(0.5 * 2.0)
+    assert s["median_ratio"] == 1.25  # midpoint of 0.5 and 2.0
 
 
-def test_pair_gate_linear_growth_passes():
-    """Pairs growing exactly with the data: no flag, no watch."""
-    _, _, norm, fail, watch, sparse = _gate(1000, 500, 10000, 5000)
-    assert not fail and not watch and not sparse
-    assert abs(norm - 1.0) < 1e-9
+def test_ab_even_sample_count_uses_midpoint():
+    s = ab_summary({"q_a": [1.0, 2.0]}, {"q_a": [3.0, 5.0]})
+    assert s["base_median_sec"] == {"q_a": 1.5}
+    assert s["head_median_sec"] == {"q_a": 4.0}
+    assert s["ratio_head_over_base"] == {"q_a": 2.6667}
 
 
-def test_pair_gate_quadratic_with_material_baseline_fails():
-    """Pairs-per-row growing ~20x on a 10x step (= near-quadratic total
-    pairs) with a real baseline: FAIL."""
-    _, _, norm, fail, _, sparse = _gate(1000, 500, 200000, 5000)
-    assert fail and not sparse and norm > 12
+def test_ab_query_missing_on_one_side_is_left_out_of_the_ratios():
+    """A query only one side timed (added, removed or errored) keeps its
+    median on that side but enters neither the ratios nor the geomean."""
+    s = ab_summary(
+        {"q_a": [1.0], "q_old": [9.0]},
+        {"q_a": [0.5], "q_new": [0.1]},
+    )
+    assert s["n_common"] == 1
+    assert s["ratio_head_over_base"] == {"q_a": 0.5}
+    assert s["geomean_ratio"] == 0.5 and s["median_ratio"] == 0.5
+    assert "q_old" in s["base_median_sec"] and "q_new" in s["head_median_sec"]
 
 
-def test_pair_gate_sparse_noise_passes():
-    """3 -> 400 pairs on a 10x step is a norm of 13.3 built on a
-    3-pair baseline — sparse-corpus noise: the norm alone would breach
-    the 12x fail threshold (the ADVICE r10 bug class), but the absolute
-    growth floor (1200) absorbs it."""
-    _, _, norm, fail, watch, sparse = _gate(3, 6000, 400, 60000)
-    assert sparse and not fail
-    assert norm > 12  # would have failed on norm alone — the bug class
+def test_ab_zero_base_median_has_no_ratio():
+    s = ab_summary({"q_a": [0.0], "q_b": [2.0]}, {"q_a": [0.1], "q_b": [1.0]})
+    assert s["n_common"] == 2
+    assert s["ratio_head_over_base"] == {"q_b": 0.5}
 
 
-def test_pair_gate_sparse_early_quadratic_fails():
-    """The review scenario: 5 -> 5000 pairs on a 10x step is an
-    early-stage quadratic even though density stays < 1 pair/row; the
-    absolute growth floor (10 * 10 * 12 = 1200) catches it."""
-    _, per_big, _, fail, _, sparse = _gate(5, 5000, 5000, 50000)
-    assert sparse and fail and per_big < 1.0
+def test_ab_no_common_queries():
+    s = ab_summary({"q_a": [1.0]}, {"q_b": [1.0]})
+    assert s["n_common"] == 0
+    assert s["geomean_ratio"] is None and s["median_ratio"] is None
 
 
-def test_pair_gate_zero_baseline_handled():
-    """p_small == 0 uses the half-pair floor for norm and the growth
-    floor for failure; a genuinely exploding big side still fails."""
-    _, _, _, fail0, _, sparse0 = _gate(0, 500, 30, 5000)
-    assert sparse0 and not fail0
-    _, _, _, fail1, _, sparse1 = _gate(0, 500, 2000, 5000)
-    assert sparse1 and fail1  # floor = 10 * 10 * 12 = 1200 < 2000
+def test_copy_levels_compose_at_most_ten_per_level():
+    """The k{i} token prefix is unambiguous for <= 10 copies, so larger
+    counts are built as copies of copies."""
+    assert copy_levels(1) == [1]
+    assert copy_levels(10) == [10]
+    assert copy_levels(100) == [10, 10]
+    assert copy_levels(50) == [10, 5]
+    with pytest.raises(ValueError):
+        copy_levels(11)
+
+
+def test_no_tracked_python_file_names_this_checkout():
+    """Code resolves the checkout from ``__file__``: a hard-coded checkout
+    path makes a copy elsewhere (an A/B base worktree) import this
+    checkout's engine instead of its own."""
+    proc = subprocess.run(
+        ["git", "grep", "-n", "-F", ROOT, "--", "*.py"],
+        cwd=ROOT, capture_output=True, text=True,
+    )
+    if proc.returncode not in (0, 1):
+        pytest.skip(f"not a git checkout: {proc.stderr.strip()}")
+    assert proc.stdout == ""
+
+
+def test_profile_reports_every_field(tmp_path):
+    out = tmp_path / "profile.json"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "measure.py"),
+         "profile", "q_charge_summary", "--sf", "/root/testdata/sf0.001",
+         "--out", str(out)],
+        capture_output=True, text=True, timeout=900,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    doc = json.loads(out.read_text())
+    assert doc["errors"] == {}
+    assert doc["engine"] == os.path.join(
+        os.path.realpath(ROOT), "gcp_healthcare_data_pipeline_spark"
+    )
+    q = doc["queries"]["q_charge_summary"]
+    assert set(q) == set(PROFILE_FIELDS)
+    assert q["rows"] > 0
+    assert q["construct_s"] > 0 and q["execute_s"] > 0
+    assert q["spark.jobs"] >= 1 and q["spark.stages"] >= 1
+    assert 0.0 <= q["functions.codegen_share"] <= 1.0
