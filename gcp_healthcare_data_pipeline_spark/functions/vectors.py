@@ -32,6 +32,21 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def dist_between(a: Column, b: Column) -> Column:
+    """Euclidean distance rounded to 6dp. Rounding happens before any
+    argmin compares it, so assignment tie-breaks are identical across
+    engines (the oracle twin is ``vector_queries._km_dist_sql``)."""
+    return F.round(F.sqrt(sq_dist(a, b)), 6)
+
+
+def sq_dist(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
 def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 

@@ -4,6 +4,11 @@
   query set against the corpus, window-rank per query. The corpus-side
   scan is embarrassingly parallel; the only shuffle is the per-query
   top-k (tiny). This is the correctness baseline.
+- :func:`packed_nearest`, :func:`hier_quantizer`, :func:`dim_mean` —
+  the nearest-centroid operator, two-level coarse quantizer and
+  per-dimension centroid mean that k-means (L2), IVF (cosine, see
+  :func:`ivf_assign`) and PQ encoding share; each caller passes its
+  metric as a key function.
 - :func:`lsh_bucket_topk` — the scale path: deterministic random-
   hyperplane LSH (signs derived from md5 of dimension index, so the
   "random" planes are reproducible without a seed exchange) buckets the
@@ -276,6 +281,115 @@ def _assert_unique_ids(df: DataFrame, col: str, who: str) -> DataFrame:
     )
 
 
+def packed_nearest(
+    df: DataFrame, cands: DataFrame, key, by: str | None = None
+) -> DataFrame:
+    """Nearest candidate per row of ``df``, added as struct column
+    ``_nn`` = struct(_k0, _k1, ..., <id>): the minimum over ``cands`` of
+    ``key(s)`` (a list of Columns over the candidate struct ``s`` and
+    ``df``'s columns), ties broken by the candidate id. The id is the
+    first column of ``cands`` other than ``by``. The one nearest-
+    candidate operator of the engine: both levels of the k-means and
+    IVF assignment, the IVF/k-means centroid -> super map and the PQ
+    encoder all run through it.
+
+    The candidates are packed into an id-sorted struct array, either as
+    ONE broadcast row (``by=None``, crossJoined) or one row per ``by``
+    value (broadcast hash join on ``by``), and the argmin is a single
+    :func:`functions.vectors.argmin_fold` over that array inside a
+    projection: ``df`` never shuffles (through r16 these were crossJoin
+    fan-outs plus row_number windows partitioned on the row id, which
+    shuffled every vector). Struct-min is lexicographic, so the result
+    IS ``row_number() over (order by key..., id) = 1``: callers round
+    their keys to 6dp, NaN sorts greatest in both engines, and
+    (key, id) is unique per candidate. A row whose candidate array is
+    empty gets a NULL ``_nn``; a row whose ``by`` value has no
+    candidates drops, like the inner join it replaces."""
+    fields = [c for c in cands.columns if c != by]
+    pack = F.array_sort(F.collect_list(F.struct(*fields))).alias("_cands")
+    if by is None:
+        joined = df.crossJoin(F.broadcast(cands.agg(pack)))
+    else:
+        joined = df.join(F.broadcast(cands.groupBy(by).agg(pack)), by)
+    best = argmin_fold(
+        F.col("_cands"),
+        lambda s: F.struct(
+            *[k.alias(f"_k{i}") for i, k in enumerate(key(s))],
+            s[fields[0]].alias(fields[0]),
+        ),
+    )
+    return joined.withColumn("_nn", best).drop("_cands")
+
+
+def hier_quantizer(
+    cents: DataFrame, mf: DataFrame, metric, sup_point: list[str]
+) -> tuple[DataFrame, DataFrame]:
+    """(supers, cmap): the coarse quantizer of a two-level assignment
+    over ``cents`` = (centroid_id, point columns...). ``mf`` is a 1-row
+    frame holding the super count ``_m``. Supers are the
+    :func:`hash_stratified_winners` of the centroid table (the seeding
+    discipline every centroid selection shares), as (super_id,
+    ``sup_point``...); cmap is ``cents`` plus the super_id of each
+    centroid's nearest super under ``metric(a, b)``, a key Column over
+    two points given as lists of Columns (lower is nearer). Callers
+    checkpoint ``cents`` first: both tables (and usually ``mf``)
+    traverse its lineage, which includes a full corpus pass after a
+    Lloyd round.
+
+    Self-preference tie-break: a centroid that IS a super maps to
+    itself. Two near-identical centroids can both be chosen as supers
+    and tie at the rounded metric; without the preference the losing
+    super is CHILDLESS and every vector routed to it would be silently
+    dropped by the inner child join, in the near-duplicate regime a
+    dedup engine exists for. Mirrored in the oracles' ``{p}cmap`` CTEs:
+    the fold key (metric, self-pref, super_id) is their (metric asc,
+    self-pref asc, id asc) window order."""
+    point = cents.columns[1:]
+    supers = hash_stratified_winners(cents, "centroid_id", mf, "_m").select(
+        F.col("centroid_id").alias("super_id"),
+        *[F.col(c).alias(n) for c, n in zip(point, sup_point)],
+    )
+    cmap = packed_nearest(
+        cents,
+        supers,
+        lambda s: [
+            metric([F.col(c) for c in point], [s[n] for n in sup_point]),
+            F.when(s["super_id"] == F.col("centroid_id"), 0).otherwise(1),
+        ],
+    ).select(*cents.columns, F.col("_nn.super_id").alias("super_id"))
+    return supers, cmap
+
+
+def dim_mean(df: DataFrame, keys: list[str], vec: str) -> DataFrame:
+    """Per-dimension mean of the array column ``vec`` per ``keys`` group:
+    (keys..., vec). posexplode + a partial-aggregated groupBy (shuffle
+    bounded by groups x dims), then the means collected back in
+    dimension order."""
+    dims = (
+        df.select(*keys, F.posexplode(vec).alias("pos", "val"))
+        .groupBy(*keys, "pos")
+        .agg(F.avg("val").alias("cval"))
+    )
+    return dims.groupBy(*keys).agg(
+        F.transform(
+            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
+            lambda s: s["cval"],
+        ).alias(vec)
+    )
+
+
+def _neg_cos_key(a: list, b: list) -> F.Column:
+    """IVF metric over (vector, norm) points: cosine rounded to 6dp,
+    negated so the argmin is (sim desc). ``0.0 - sim`` (not unary minus)
+    keeps signed zeros from ordering differently, and nanvl maps a NaN
+    similarity to -inf after negation so it WINS the min exactly like
+    the row_number window (both engines sort NaN first under DESC)."""
+    return F.lit(0.0) - F.nanvl(
+        F.round(cosine_precomputed(a[0], b[0], a[1], b[1]), 6),
+        F.lit(float("inf")),
+    )
+
+
 def ivf_assign(
     df: DataFrame, vec: str, nrm: str, keep: int,
     supers: DataFrame, cmap: DataFrame, super_keep: int = 1,
@@ -289,52 +403,18 @@ def ivf_assign(
     Tie-breaks at both levels: rounded cosine desc, id asc —
     mirrored in the oracle.
 
-    keep-1 argmaxes (the corpus-side, cost-critical path) run as
-    single-pass :func:`functions.vectors.argmin_fold` folds over
-    BROADCAST-PACKED candidate arrays inside a
-    projection — ZERO exchange of the assigned frame (r17 optimization,
-    guide §2.4; through r16 they were partial-combining groupBy
-    min-struct aggregates, which still shuffled one pre-reduced row
-    per vector, vectors included). The fold key is
-    struct(0.0 - nanvl(sim, +inf), id): lexicographic struct-min IS
-    (sim desc, id asc); ``0.0 - sim`` (not unary minus) keeps signed
-    zeros from ordering differently, and nanvl maps a NaN similarity
-    to -inf after negation so it WINS the min exactly like the
-    row_number window (both engines sort NaN first under DESC).
-    Top-N keeps (query probing, tiny side) still use the window."""
+    keep-1 argmaxes (the corpus-side, cost-critical path) run through
+    :func:`packed_nearest` with :func:`_neg_cos_key`. Top-N keeps (query
+    probing, tiny side) use row_number windows. Output: ``df``'s id,
+    its other columns, centroid_id."""
     idc = df.columns[0]
     carry = [c for c in df.columns if c != idc]
-
-    def negkey(sim: "F.Column") -> "F.Column":
-        return F.lit(0.0) - F.nanvl(sim, F.lit(float("inf")))
+    x = [F.col(vec), F.col(nrm)]
 
     if super_keep == 1:
-        # all supers packed into one broadcastable id-sorted struct row;
-        # the route is an in-row fold — the df side never shuffles
-        sup_arr = supers.agg(
-            F.array_sort(
-                F.collect_list(F.struct("super_id", "_sv", "_sn"))
-            ).alias("_sups")
-        )
-        best_sup = argmin_fold(
-            F.col("_sups"),
-            lambda s: F.struct(
-                negkey(
-                    F.round(
-                        cosine_precomputed(
-                            F.col(vec), s["_sv"], F.col(nrm), s["_sn"]
-                        ),
-                        6,
-                    )
-                ).alias("_neg"),
-                s["super_id"].alias("super_id"),
-            ),
-        )
-        routed = (
-            df.crossJoin(F.broadcast(sup_arr))
-            .withColumn("super_id", best_sup["super_id"])
-            .drop("_sups")
-        )
+        routed = packed_nearest(
+            df, supers, lambda s: [_neg_cos_key(x, [s["_sv"], s["_sn"]])]
+        ).withColumn("super_id", F.col("_nn.super_id")).drop("_nn")
     else:
         sroutes = df.crossJoin(F.broadcast(supers)).withColumn(
             "_ssim",
@@ -354,38 +434,16 @@ def ivf_assign(
             .drop("_sv", "_sn", "_ssim", "_srn")
         )
     if keep == 1 and super_keep == 1:
-        # children packed per super (msup rows, ~nlist/msup children
-        # each): broadcast hash join + in-row argmax — no exchange, and
-        # no single row ever holds the whole centroid table.
         # Gated on super_keep == 1 as well (r17 ADVICE): with
-        # super_keep > 1 this per-super argmax would emit one winner per
+        # super_keep > 1 a per-super argmax would emit one winner per
         # PROBED super instead of the window path's single global best
-        # per id — every current keep==1 caller routes 1 super, so the
-        # gate is contract hardening, not a behavior change.
-        fam = cmap.groupBy("super_id").agg(
-            F.collect_list(
-                F.struct("centroid_id", "_cv", "_ccn")
-            ).alias("_kids")
-        )
-        best = argmin_fold(
-            F.col("_kids"),
-            lambda s: F.struct(
-                negkey(
-                    F.round(
-                        cosine_precomputed(
-                            F.col(vec), s["_cv"], F.col(nrm), s["_ccn"]
-                        ),
-                        6,
-                    )
-                ).alias("_neg"),
-                s["centroid_id"].alias("centroid_id"),
-            ),
-        )
-        return (
-            routed.join(F.broadcast(fam), "super_id")
-            .withColumn("centroid_id", best["centroid_id"])
-            .select(idc, *carry, "centroid_id")
-        )
+        # per id.
+        return packed_nearest(
+            routed,
+            cmap,
+            lambda s: [_neg_cos_key(x, [s["_cv"], s["_ccn"]])],
+            by="super_id",
+        ).select(idc, *carry, F.col("_nn.centroid_id").alias("centroid_id"))
     cjoined = routed.join(F.broadcast(cmap), "super_id").withColumn(
         "_csim",
         F.round(
@@ -404,6 +462,7 @@ def ivf_assign(
         .drop("_cv", "_ccn", "_csim", "_crank", "super_id")
     )
 
+
 def ivf_index(
     corpus: DataFrame,
     centroid_mod: int | None = 31,
@@ -413,23 +472,21 @@ def ivf_index(
     validate_ids: bool = False,
 ):
     """Build the IVF index over ``corpus``: returns
-    ``(supers, cmap, assigned, assign)`` — the hierarchical coarse
-    quantizer's super-centroid table, the centroid→super child map, the
-    corpus inverted lists (every vector keep-1 assigned:
-    (neighbor_id, _v, _cn, centroid_id)), and the generic two-level
-    ``assign`` function bound to nothing (callers pass their own frame
-    + supers/cmap) — so SEARCH (:func:`ivf_topk`) and INDEX APPEND
-    (q_ann_ivf_incremental's delta assignment) run the IDENTICAL
+    ``(supers, cmap, assigned)`` — the hierarchical coarse quantizer's
+    super-centroid table, the centroid→super child map and the corpus
+    inverted lists (every vector keep-1 assigned:
+    (neighbor_id, _v, _cn, centroid_id)). SEARCH (:func:`ivf_topk`) and
+    INDEX APPEND (q_ann_ivf_incremental's delta assignment) pass their
+    own frame with these supers/cmap to :func:`ivf_assign`, the same
+    function that built the inverted lists, so they run the IDENTICAL
     machinery against the same standing index.
 
-    CONTRACT: ``id_col`` must be UNIQUE within ``corpus``. The keep-1
-    assignment aggregates carry payload columns with ``first(...)`` per
-    id group — deterministic ONLY because every row of a group then
-    holds the same payload; a duplicate-id corpus would collapse to one
-    nondeterministically-chosen vector per id with no error and diverge
-    from the oracle. Pass ``validate_ids=True`` (debug mode — one extra
-    id-projection groupBy) to make a duplicate-id corpus fail loudly at
-    execution time instead.
+    CONTRACT: ``id_col`` must be UNIQUE within ``corpus``. The top-N
+    assignment path ranks candidates in a window partitioned by the id,
+    so a duplicate-id frame would merge two vectors' rankings with no
+    error and diverge from the oracle. Pass ``validate_ids=True`` (debug
+    mode — one extra id-projection groupBy) to make a duplicate-id
+    corpus fail loudly at execution time instead.
 
     Centroid seeds are a deterministic corpus sample
     (id % centroid_mod == 0; ``centroid_mod=None`` uses the fixed
@@ -552,96 +609,27 @@ def ivf_index(
         .drop("_nseeds")
     )
 
-    def hier_quantizer(cents: DataFrame) -> tuple[DataFrame, DataFrame]:
-        """(supers, cmap) for one centroid-set version: msup =
-        max(1, ceil(sqrt(n_cents))) hash-stratified super-centroids
-        (one hash-minimal centroid per id-hash bucket — same seeding
-        discipline as the k-means family) and the centroid -> super
-        max-cosine map. Both are tiny broadcast tables; cents is
-        checkpointed because supers + cmap traverse its lineage (which
-        includes a full corpus pass after a Lloyd round)."""
+    def quantize(cents: DataFrame) -> tuple[DataFrame, DataFrame]:
         cents = cents.localCheckpoint(eager=False)
+        # msup = max(1, ceil(sqrt(n_cents))), a 1-row broadcast aggregate
         mf = cents.agg(
             F.greatest(F.lit(1), F.ceil(F.sqrt(F.count(F.lit(1)))))
             .cast("bigint")
             .alias("_m")
         )
-        supers = hash_stratified_winners(cents, "centroid_id", mf, "_m").select(
-            F.col("centroid_id").alias("super_id"),
-            F.col("_cv").alias("_sv"),
-            F.col("_ccn").alias("_sn"),
-        )
-        # self-preference tie-break: a centroid that IS a super must map
-        # to itself — two near-identical vectors both chosen as supers
-        # tie at rounded cosine 1.000000, and without the preference the
-        # losing super is CHILDLESS, silently dropping every vector the
-        # coarse router sends to it. Mirrored in _ivf_hier_sql's cmap.
-        # Struct-min over (negated-nan-guarded sim, self-pref, super_id)
-        # inside a projection reproduces the former row_number window's
-        # (sim desc, self-pref asc, id asc) ordering without shuffling
-        # the centroid table (r17 optimization, guide §2.4 — nlist grows
-        # with the corpus under target-cluster sizing, so this exchange
-        # was corpus-proportional).
-        sup_arr = supers.agg(
-            F.array_sort(
-                F.collect_list(F.struct("super_id", "_sv", "_sn"))
-            ).alias("_sups")
-        )
-        best = argmin_fold(
-            F.col("_sups"),
-            lambda s: F.struct(
-                (
-                    F.lit(0.0)
-                    - F.nanvl(
-                        F.round(
-                            cosine_precomputed(
-                                F.col("_cv"), s["_sv"],
-                                F.col("_ccn"), s["_sn"],
-                            ),
-                            6,
-                        ),
-                        F.lit(float("inf")),
-                    )
-                ).alias("_neg"),
-                F.when(s["super_id"] == F.col("centroid_id"), 0)
-                .otherwise(1)
-                .alias("_p"),
-                s["super_id"].alias("super_id"),
-            ),
-        )
-        cmap = (
-            cents.crossJoin(F.broadcast(sup_arr))
-            .withColumn("super_id", best["super_id"])
-            .select("centroid_id", "_cv", "_ccn", "super_id")
-        )
-        return supers, cmap
-
-    assign = ivf_assign
+        return hier_quantizer(cents, mf, _neg_cos_key, ["_sv", "_sn"])
 
     for _ in range(lloyd_iters):
-        supers, cmap = hier_quantizer(cents)
-        members = assign(c_raw, "_v", "_cn", 1, supers, cmap)
-        dims = (
-            members.select(
-                "centroid_id", F.posexplode("_v").alias("pos", "val")
-            )
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("val").alias("cval"))
-        )
+        supers, cmap = quantize(cents)
+        members = ivf_assign(c_raw, "_v", "_cn", 1, supers, cmap)
         cents = (
-            dims.groupBy("centroid_id")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                    lambda s: s["cval"],
-                ).alias("_cv")
-            )
+            dim_mean(members, ["centroid_id"], "_v")
+            .withColumnRenamed("_v", "_cv")
             .withColumn("_ccn", norm(F.col("_cv")))
         )
 
-    supers, cmap = hier_quantizer(cents)
-    c = assign(c_raw, "_v", "_cn", 1, supers, cmap)
-    return supers, cmap, c, assign
+    supers, cmap = quantize(cents)
+    return supers, cmap, ivf_assign(c_raw, "_v", "_cn", 1, supers, cmap)
 
 
 def ivf_topk(
@@ -669,10 +657,10 @@ def ivf_topk(
     """
     if validate_ids:
         queries = _assert_unique_ids(queries, id_col, "ivf_topk queries")
-    supers, cmap, c, assign = ivf_index(
+    supers, cmap, c = ivf_index(
         corpus, centroid_mod, lloyd_iters, id_col, vec_col, validate_ids
     )
-    q = assign(
+    q = ivf_assign(
         queries.select(
             F.col(id_col).alias("query_id"), as_double(vec_col).alias("_qv")
         ).withColumn("_qn", norm(F.col("_qv"))),

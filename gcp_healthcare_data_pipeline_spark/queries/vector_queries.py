@@ -14,18 +14,24 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from gcp_healthcare_data_pipeline_spark.functions.vectors import (
-    argmin_fold,
     as_double,
     cosine_precomputed,
+    dist_between,
+    dot,
     norm,
+    sq_dist,
 )
 from gcp_healthcare_data_pipeline_spark.operators.similarity import (
     IVF_TARGET_CLUSTER_FLOATS,
     brute_force_topk,
+    dim_mean,
+    hash_stratified_winners,
+    hier_quantizer,
     ivf_assign,
     ivf_index,
     ivf_topk,
     lsh_bucket_topk,
+    packed_nearest,
 )
 from gcp_healthcare_data_pipeline_spark.queries.registry import QuerySpec
 from gcp_healthcare_data_pipeline_spark.session import load_tables
@@ -467,8 +473,8 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     few clusters, those clusters' probe cost degrades and the epoch
     policy (tests/test_epoch_pinning_ivf.py) says when to re-derive the
     index shape. Build and append run the IDENTICAL machinery
-    (:func:`operators.similarity.ivf_index` returns the assign function
-    the search side uses), so the appended lists are exactly what
+    (:func:`operators.similarity.ivf_assign`, which also builds the
+    index's inverted lists), so the appended lists are exactly what
     ivf_topk would probe."""
     emb = load_tables(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -487,14 +493,14 @@ def q_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # multi-centroid index (the adaptive 256 leaves sf0.001's corpus a
     # single seed). The oracles interpolate the same constant, so there
     # is exactly one definition to change.
-    supers, cmap, assigned, assign = ivf_index(
+    supers, cmap, assigned = ivf_index(
         corpus, centroid_mod=_IVF_INCREMENTAL_MOD, lloyd_iters=1
     )
     b = batch.select(
         F.col("vec_id").alias("neighbor_id"),
         as_double("embedding").alias("_v"),
     ).withColumn("_cn", norm(F.col("_v")))
-    b_assigned = assign(b, "_v", "_cn", 1, supers, cmap)
+    b_assigned = ivf_assign(b, "_v", "_cn", 1, supers, cmap)
     before = assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n_before")
     )
@@ -554,7 +560,7 @@ def q_ann_ivf_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = load_tables(spark, sf_dir, "embeddings")
     corpus = raw.filter(F.col("vec_id") % 10 != 0)
-    supers, cmap, assigned, assign = ivf_index(
+    supers, cmap, assigned = ivf_index(
         corpus.select("vec_id", "embedding"),
         centroid_mod=_IVF_INCREMENTAL_MOD,
         lloyd_iters=1,
@@ -619,7 +625,7 @@ def q_ivf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapshot manifest (a reader must never pair run-N supers with
     run-N-1 children — the quantizer levels are meaningless apart),
     then run the nightly append from the LOADED tables: the delta
-    routes through the loaded quantizer via the SAME generic ``assign``
+    routes through the loaded quantizer via the SAME ``ivf_assign``
     the search side uses, and the growth report joins against the
     loaded occupancy. Oracle is q_ann_ivf_incremental's VERBATIM —
     load-then-append must hash-equal build-then-append.
@@ -644,7 +650,7 @@ def q_ivf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", "embedding"
     )
     is_batch = F.col("vec_id") % 10 == 0
-    supers, cmap, assigned, assign = ivf_index(
+    supers, cmap, assigned = ivf_index(
         emb.filter(~is_batch),
         centroid_mod=_IVF_INCREMENTAL_MOD,
         lloyd_iters=1,
@@ -667,7 +673,7 @@ def q_ivf_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("neighbor_id"),
             as_double("embedding").alias("_v"),
         ).withColumn("_cn", norm(F.col("_v")))
-        b_assigned = assign(
+        b_assigned = ivf_assign(
             b, "_v", "_cn", 1, loaded["supers"], loaded["cmap"]
         )
         app = b_assigned.groupBy("centroid_id").agg(
@@ -978,35 +984,24 @@ _ORACLE_ANN_IVF_SHARDED = _ann_ivf_sharded_oracle_sql()
 def q_embedding_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid distance outliers (mislabeled-example mining).
 
-    Computes each label's centroid (per-dimension mean via posexplode +
-    partial-aggregated groupBy — one shuffle bounded by |labels| x dims),
-    broadcasts the tiny centroid table back onto the corpus, and ranks
-    vectors by euclidean distance from their label centroid; the top-5
-    farthest per label are the candidate label errors a curation pipeline
-    routes to review. Distance is a sequential ``F.aggregate`` fold so the
-    accumulation order matches the oracle's ``list_sum`` exactly.
+    Computes each label's centroid (:func:`operators.similarity.dim_mean`
+    — one shuffle bounded by |labels| x dims), broadcasts the tiny
+    centroid table back onto the corpus, and ranks vectors by euclidean
+    distance from their label centroid; the top-5 farthest per label are
+    the candidate label errors a curation pipeline routes to review.
+    Distance is a sequential ``F.aggregate`` fold so the accumulation
+    order matches the oracle's ``list_sum`` exactly.
     """
     from pyspark.sql import Window
 
     emb = load_tables(spark, sf_dir, "embeddings").select(
         "vec_id", "label", as_double("embedding").alias("v")
     )
-    dims = emb.select(
-        "label", F.posexplode("v").alias("pos", "val")
-    ).groupBy("label", "pos").agg(F.avg("val").alias("cval"))
-    centroids = dims.groupBy("label").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("c")
-    )
-    diff_sq = F.aggregate(
-        F.zip_with(F.col("v"), F.col("c"), lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    centroids = dim_mean(emb, ["label"], "v").withColumnRenamed("v", "c")
     scored = emb.join(F.broadcast(centroids), "label").select(
-        "label", "vec_id", F.round(F.sqrt(diff_sq), 6).alias("centroid_dist")
+        "label",
+        "vec_id",
+        dist_between(F.col("v"), F.col("c")).alias("centroid_dist"),
     )
     w = Window.partitionBy("label").orderBy(
         F.col("centroid_dist").desc(), F.col("vec_id").asc()
@@ -1145,7 +1140,8 @@ _M_SQL = _m_sql()
 
 
 def _km_dist_sql(a: str, b: str) -> str:
-    """DuckDB twin of :func:`_dist_between` for arbitrary column refs."""
+    """DuckDB twin of :func:`functions.vectors.dist_between` for
+    arbitrary column refs."""
     return (
         f"ROUND(SQRT(list_sum(list_transform(range(1, len({a}) + 1), "
         f"i -> ({a}[i] - {b}[i]) * ({a}[i] - {b}[i])))), 6)"
@@ -1252,33 +1248,12 @@ def _seed_centroids(emb: DataFrame) -> DataFrame:
     shuffle. The bucket-winner discipline is the shared
     :func:`operators.similarity.hash_stratified_winners`; mirrored
     verbatim in the oracle ``_C0_SQL``."""
-    from gcp_healthcare_data_pipeline_spark.operators.similarity import (
-        hash_stratified_winners,
-    )
-
     winners = hash_stratified_winners(
         emb.select("vec_id"), "vec_id", _derived_k(emb), "_k"
     )
     return emb.join(F.broadcast(winners), "vec_id").select(
         F.col("vec_id").alias("centroid_id"), F.col("v").alias("c")
     )
-
-
-def _dist_between(a: "F.Column", b: "F.Column") -> "F.Column":
-    """Rounded euclidean distance between two vector columns as a
-    sequential fold. Rounding to 6dp happens BEFORE the argmin so
-    assignment tie-breaks are identical across engines."""
-    sq = F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return F.round(F.sqrt(sq), 6)
-
-
-def _dist_to_centroid() -> "F.Column":
-    """Rounded euclidean distance between ``v`` and ``c``."""
-    return _dist_between(F.col("v"), F.col("c"))
 
 
 def _derived_m(emb: DataFrame) -> DataFrame:
@@ -1297,48 +1272,10 @@ def _derived_m(emb: DataFrame) -> DataFrame:
     )
 
 
-def _super_centroids(
-    centroids: DataFrame, emb: DataFrame, m_frame: "DataFrame | None" = None
-) -> DataFrame:
-    """m hash-stratified super-centroids chosen FROM the centroid table
-    (the shared :func:`operators.similarity.hash_stratified_winners`
-    discipline, keyed on centroid_id): m id-hash buckets, one
-    hash-minimal member each. Deterministic, uniform over the centroid
-    set, mirrored verbatim in the oracle's ``{p}sup`` CTE.
-
-    ``m_frame`` overrides the m derivation (default: derived from the
-    frame being assigned) — the incremental delta routes pass the
-    STANDING corpus's m so routing is a pure function of standing
-    state, never of the arriving batch's composition (review finding:
-    a micro-batched delta would otherwise derive a different m than
-    the full delta and route differently at scale)."""
-    from gcp_healthcare_data_pipeline_spark.operators.similarity import (
-        hash_stratified_winners,
-    )
-
-    return hash_stratified_winners(
-        centroids, "centroid_id",
-        _derived_m(emb) if m_frame is None else m_frame, "_m",
-    ).select(F.col("centroid_id").alias("super_id"), F.col("c").alias("sc"))
-
-
-def _pack_nearest_struct(arr: "F.Column", v: "F.Column") -> "F.Column":
-    """min (rounded-dist, id) struct over a packed (i, c) struct array:
-    struct-min is lexicographic, so struct(d, i) min IS the former
-    ``row_number() over (order by dist asc, id asc) = 1``
-    window — identical tie-breaks (rounded to 6dp BEFORE the compare,
-    NaN sorts greatest in both, and (d, i) is unique per element).
-    NULL/empty array propagates to a NULL struct (callers drop those
-    rows, matching the former inner child join). Runs as a single-pass
-    :func:`functions.vectors.argmin_fold` (r18; the r17
-    array_min-over-transform allocated the full candidate-struct array
-    per row before scanning it)."""
-    return argmin_fold(
-        arr,
-        lambda s: F.struct(
-            _dist_between(v, s["c"]).alias("d"), s["i"].alias("i")
-        ),
-    )
+def _l2_key(a: list, b: list) -> "F.Column":
+    """k-means metric over one-vector points: rounded euclidean
+    distance, ascending."""
+    return dist_between(a[0], b[0])
 
 
 def _kmeans_assign(
@@ -1350,114 +1287,56 @@ def _kmeans_assign(
     probe measured as n^2/256 — SCALING_r11.md §4):
 
     1. seed m = ceil(sqrt(k)) super-centroids hash-stratified over the
-       centroid table (:func:`_super_centroids`);
-    2. map every centroid to its nearest super (k x m folds — tiny);
-    3. route every vector to its nearest super (n x m folds);
-    4. argmin only that super-cluster's child centroids (n x k/m folds
+       centroid table and map every centroid to its nearest super (k x m
+       folds — tiny; :func:`operators.similarity.hier_quantizer`);
+    2. route every vector to its nearest super (n x m folds);
+    3. argmin only that super-cluster's child centroids (n x k/m folds
        on average).
 
-    Total distance work n*2*sqrt(k) instead of n*k. Tie-breaks at both
-    levels: rounded dist asc, id asc — bit-identical in the oracle's
-    :func:`_hier_assign_sql` CTEs. Output contract unchanged:
+    Total distance work n*2*sqrt(k) instead of n*k. Both argmins are
+    :func:`operators.similarity.packed_nearest` folds over the rounded
+    L2 distance, tie-break id asc — bit-identical in the oracle's
+    :func:`_hier_assign_sql` CTEs. The corpus never shuffles; the only
+    exchanges are the tiny centroid-side aggregations. Output contract:
     (vec_id, v, centroid_id, dist).
 
-    Execution shape (r17 optimization, guide §2.4 "remove shuffles
-    outright"): through r16 steps 3-4 were crossJoin fan-outs followed
-    by row_number windows partitioned on vec_id — TWO exchanges that
-    shuffled n x m (then n x k/m) rows each carrying the full vector.
-    Now the super table is packed into one broadcast row (an id-sorted
-    struct array) and the child map into m broadcast rows (super_id ->
-    packed children), and both argmins run as array_min-over-transform
-    folds inside projections over the corpus scan: the corpus never
-    shuffles, never fans out, and the only exchanges left are the tiny
-    centroid-side aggregations (bucket winners, the 1-row super pack,
-    the child-map groupBy). Distance-fold count is unchanged
-    (n*m + n*k/m); what disappears is the data movement. Measured
-    (sf0.1, construct + count, three runs): q_semdedup 7.4 -> 5.6 s,
-    and the two corpus-scale window exchanges per assignment pass are
-    gone from every consumer's plan."""
-    # both the super seeding and the child map traverse the centroid
-    # lineage (which includes a full corpus pass after a Lloyd
-    # recompute) — checkpoint so it is computed once (a former
-    # skip-checkpoint mode for small-shard loops measured 2.9x SLOWER,
-    # see _semdedup_drops)
-    centroids = centroids.localCheckpoint(eager=False)
-    supers = _super_centroids(centroids, emb, m_frame)
-    # all supers packed into one broadcastable id-sorted struct array
-    sup_arr = supers.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(F.col("super_id").alias("i"), F.col("sc").alias("c"))
-            )
-        ).alias("_sups")
+    ``m_frame`` overrides the m derivation (default: derived from the
+    frame being assigned) — the incremental delta routes pass the
+    STANDING corpus's m so routing is a pure function of standing
+    state, never of the arriving batch's composition (review finding:
+    a micro-batched delta would otherwise derive a different m than
+    the full delta and route differently at scale)."""
+    # supers and cmap both traverse the centroid lineage (a full corpus
+    # pass after a Lloyd round): checkpoint so it is computed once (a
+    # former skip-checkpoint mode for small-shard loops measured 2.9x
+    # SLOWER, see _semdedup_drops)
+    supers, cmap = hier_quantizer(
+        centroids.localCheckpoint(eager=False),
+        _derived_m(emb) if m_frame is None else m_frame,
+        _l2_key,
+        ["sc"],
     )
-
-    # self-preference tie-break: a centroid that IS a super must map to
-    # itself. Two near-identical vectors can both be hash-chosen as
-    # supers; their mutual rounded distance then TIES the 0.000000
-    # self-distance, the plain (dist, id) tie-break sends the higher-id
-    # super under the lower one, the higher super ends up CHILDLESS,
-    # and every vector routed to it would be silently DROPPED by the
-    # inner child join — in the near-duplicate regime this dedup engine
-    # exists for. Mirrored in the oracle's {p}cmap CTE. struct-min over
-    # (d, self-pref, i) is that exact ordering.
-    cmap = centroids.crossJoin(F.broadcast(sup_arr)).select(
-        "centroid_id",
-        "c",
-        argmin_fold(
-            F.col("_sups"),
-            lambda s: F.struct(
-                _dist_between(F.col("c"), s["c"]).alias("d"),
-                F.when(s["i"] == F.col("centroid_id"), 0)
-                .otherwise(1)
-                .alias("p"),
-                s["i"].alias("i"),
-            ),
-        )["i"].alias("super_id"),
-    )
-    # super_id -> its children packed per super (m rows, each holding
-    # its ~k/m children) — a broadcast-hash-join relation, so no single
-    # row ever holds the whole centroid table (max row = one super's
-    # child list, bounded by the cluster fan-out)
-    fam = cmap.groupBy("super_id").agg(
-        F.collect_list(
-            F.struct(F.col("centroid_id").alias("i"), F.col("c").alias("c"))
-        ).alias("_kids")
-    )
-
-    return (
-        emb.crossJoin(F.broadcast(sup_arr))
-        .withColumn(
-            "_sid", _pack_nearest_struct(F.col("_sups"), F.col("v"))["i"]
-        )
-        .drop("_sups")
-        # inner join: a vector routed to a childless/absent super drops,
-        # exactly like the former inner child join (self-preference in
-        # cmap guarantees every super has at least itself as a child)
-        .join(F.broadcast(fam), F.col("_sid") == fam["super_id"])
-        .withColumn("_b", _pack_nearest_struct(F.col("_kids"), F.col("v")))
-        .select(
-            "vec_id",
-            "v",
-            F.col("_b.i").alias("centroid_id"),
-            F.col("_b.d").alias("dist"),
-        )
+    x = [F.col("v")]
+    routed = packed_nearest(
+        emb, supers, lambda s: [_l2_key(x, [s["sc"]])]
+    ).withColumn("super_id", F.col("_nn.super_id")).drop("_nn")
+    # a vector routed to a childless super would drop; the quantizer's
+    # self-preference gives every super at least itself as a child
+    return packed_nearest(
+        routed, cmap, lambda s: [_l2_key(x, [s["c"]])], by="super_id"
+    ).select(
+        "vec_id",
+        "v",
+        F.col("_nn.centroid_id").alias("centroid_id"),
+        F.col("_nn._k0").alias("dist"),
     )
 
 
-def _kmeans_recompute(assigned: DataFrame) -> DataFrame:
-    """New centroids = per-dimension mean of each cluster's members
-    (posexplode + partial-aggregated groupBy, shuffle bounded by
-    k x dims)."""
-    dims = assigned.select(
-        "centroid_id", F.posexplode("v").alias("pos", "val")
-    ).groupBy("centroid_id", "pos").agg(F.avg("val").alias("cval"))
-    return dims.groupBy("centroid_id").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-            lambda s: s["cval"],
-        ).alias("c")
-    )
+def _lloyd_centroids(emb: DataFrame) -> DataFrame:
+    """(centroid_id, c): hash-stratified seeds refined by one Lloyd
+    round (assign, then each cluster's per-dimension member mean)."""
+    assigned = _kmeans_assign(emb, _seed_centroids(emb))
+    return dim_mean(assigned, ["centroid_id"], "v").withColumnRenamed("v", "c")
 
 
 def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1475,11 +1354,7 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", as_double("embedding").alias("v"))
         .localCheckpoint(eager=False)
     )
-    centroids = _seed_centroids(emb)
-    assigned = None
-    for _ in range(2):
-        assigned = _kmeans_assign(emb, centroids)
-        centroids = _kmeans_recompute(assigned)
+    assigned = _kmeans_assign(emb, _lloyd_centroids(emb))
     return assigned.groupBy("centroid_id").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.round(F.avg("dist"), 6).alias("avg_dist"),
@@ -1529,9 +1404,9 @@ def q_cluster_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", as_double("embedding").alias("v"))
         .localCheckpoint(eager=False)
     )
-    centroids = _seed_centroids(emb)
-    centroids = _kmeans_recompute(_kmeans_assign(emb, centroids))
-    assigned = _kmeans_assign(emb, centroids).select("vec_id", "centroid_id")
+    assigned = _kmeans_assign(emb, _lloyd_centroids(emb)).select(
+        "vec_id", "centroid_id"
+    )
     shuffle_key = F.conv(
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 12), 16, 10
     ).cast("bigint")
@@ -1609,18 +1484,8 @@ def _semdedup_drops(emb: DataFrame) -> DataFrame:
     it was dead code; making it live falsified the claim)."""
     from pyspark.sql import Window
 
-    emb = emb.localCheckpoint(eager=False)  # shared by seed + assign
-    centroids = _seed_centroids(emb)
-    # one Lloyd refinement round: the blocking quality a real deployment
-    # gets from k-means, still fully deterministic / oracle-checkable
-    centroids = _kmeans_recompute(_kmeans_assign(emb, centroids))
-    assigned = (
-        _kmeans_assign(emb, centroids)
-        .select("vec_id", "v", "centroid_id")
-        .withColumn("_n", norm(F.col("v")))
-        # both sides of the bucket self-join
-        .localCheckpoint(eager=False)
-    )
+    # emb is shared by seed + assign
+    assigned = _blocked_assignment(emb.localCheckpoint(eager=False))
     a = assigned.select(
         "centroid_id",
         F.col("vec_id").alias("id_keep"),
@@ -1703,10 +1568,8 @@ def _semdedup_cross_shard_drops(survivors: DataFrame) -> DataFrame:
     from pyspark.sql import Window
 
     emb2 = survivors.select("vec_id", "v").localCheckpoint(eager=False)
-    centroids = _seed_centroids(emb2)
-    centroids = _kmeans_recompute(_kmeans_assign(emb2, centroids))
     assigned = (
-        _kmeans_assign(emb2, centroids)
+        _kmeans_assign(emb2, _lloyd_centroids(emb2))
         .select("vec_id", "v", "centroid_id")
         .join(survivors.select("vec_id", "shard_id"), "vec_id")
         .withColumn("_n", norm(F.col("v")))
@@ -2035,8 +1898,8 @@ def _route_batch(
     route is a pure function of standing state, independent of which
     other vectors happen to arrive in the same batch (so a micro-batched
     delta routes identically to the full one — the q_stream_semdedup
-    invariant; the IVF family's hier_quantizer already derives its
-    supers from the standing index, and this mirrors that discipline).
+    invariant; the IVF family already derives its supers from the
+    standing index, and this mirrors that discipline).
     ONE definition shared by _incremental_standing_assigned and the
     streaming foreachBatch handler — the review-found m-divergence
     lived in exactly this fragment's duplicate."""
@@ -2072,9 +1935,9 @@ def _incremental_standing_assigned(
     is_batch = F.col("vec_id") % 10 == 0
     corpus = emb.filter(~is_batch).localCheckpoint(eager=False)
     batch = emb.filter(is_batch)
-    centroids = _kmeans_recompute(
-        _kmeans_assign(corpus, _seed_centroids(corpus))
-    ).localCheckpoint(eager=False)  # reused by corpus AND batch assigns
+    centroids = _lloyd_centroids(corpus).localCheckpoint(
+        eager=False  # reused by corpus AND batch assigns
+    )
     assigned = (
         _kmeans_assign(corpus, centroids)
         .select("vec_id", "v", "centroid_id")
@@ -2687,36 +2550,21 @@ def _pq_subvectors(emb: DataFrame) -> DataFrame:
 def _pq_assign(sub: DataFrame, cb: DataFrame) -> DataFrame:
     """Nearest codeword per (vec_id, sub) — ZERO-SHUFFLE: the codebook
     is constant-size (``_PQ_SUBS x _PQ_CODES`` rows) by construction, so
-    it collapses to ONE broadcast row holding the whole table as an
-    array of structs, and the argmin is an in-row fold over that array
-    (rounded distance asc, code_id asc — struct-min reproduces the same
-    tie discipline as every assignment in the engine, mirrored in the
-    oracle's a1/codes CTEs). The r14 plan windowed over (vec_id, sub) —
-    a corpus-wide exchange just to pick a per-row minimum; encoding
-    100 TB must be a map-only stage, and now it is."""
-    cbrow = cb.agg(
-        F.array_sort(F.collect_list(F.struct("sub", "code_id", "cw"))).alias(
-            "_cb"
-        )
-    )
-    cands = F.filter(F.col("_cb"), lambda c: c["sub"] == F.col("sub"))
-    best = argmin_fold(
-        cands,
-        lambda c: F.struct(
-            _dist_between(F.col("sv"), c["cw"]).alias("_d"),
-            c["code_id"].alias("code_id"),
-        ),
-    )
-    return (
-        sub.crossJoin(F.broadcast(cbrow))
-        .withColumn("_best", best)
-        .select(
-            "vec_id",
-            "sub",
-            "sv",
-            F.col("_best.code_id").alias("code_id"),
-            F.col("_best._d").alias("_qdist"),
-        )
+    it packs into one broadcast row per subspace and the argmin is an
+    in-row :func:`operators.similarity.packed_nearest` fold (rounded
+    distance asc, code_id asc — the tie discipline of every assignment
+    in the engine, mirrored in the oracle's a1/codes CTEs). The r14 plan
+    windowed over (vec_id, sub) — a corpus-wide exchange just to pick a
+    per-row minimum; encoding 100 TB must be a map-only stage, and now
+    it is."""
+    return packed_nearest(
+        sub, cb, lambda c: [_l2_key([F.col("sv")], [c["cw"]])], by="sub"
+    ).select(
+        "vec_id",
+        "sub",
+        "sv",
+        F.col("_nn.code_id").alias("code_id"),
+        F.col("_nn._k0").alias("_qdist"),
     )
 
 
@@ -2737,10 +2585,6 @@ def _pq_codebook_and_codes(
     constant-size codebook (r14 verdict item 3); standard practice
     (and the 100 TB shape) is train-on-sample, encode-everything, with
     shortlist recall recorded in SCALING_r14.md §6 and SCALING_r15.md §2."""
-    from gcp_healthcare_data_pipeline_spark.operators.similarity import (
-        hash_stratified_winners,
-    )
-
     sub = _pq_subvectors(emb).localCheckpoint(eager=False)
     mT = spark.range(1).select(F.lit(_PQ_TRAIN).cast("bigint").alias("_m"))
     train_ids = hash_stratified_winners(
@@ -2756,20 +2600,9 @@ def _pq_codebook_and_codes(
     cb0 = tsub.join(F.broadcast(winners), "vec_id").select(
         "sub", F.col("vec_id").alias("code_id"), F.col("sv").alias("cw")
     )
-    a1 = _pq_assign(tsub, cb0)
-    d1 = (
-        a1.select("sub", "code_id", F.posexplode("sv").alias("pos", "val"))
-        .groupBy("sub", "code_id", "pos")
-        .agg(F.avg("val").alias("cval"))
-    )
     cb1 = (
-        d1.groupBy("sub", "code_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "cval"))),
-                lambda s: s["cval"],
-            ).alias("cw")
-        )
+        dim_mean(_pq_assign(tsub, cb0), ["sub", "code_id"], "sv")
+        .withColumnRenamed("sv", "cw")
         # consumed by the re-encode AND the query distance table
         .localCheckpoint(eager=False)
     )
@@ -2788,7 +2621,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     |Q| x _PQ_SUBS x _PQ_CODES rows — broadcast onto the code table, so
     the scan side never shuffles; per-candidate distance is the
     sub-ordered sequential fold of the four table lookups (deterministic
-    summation order, same discipline as _kmeans_recompute's sorted
+    summation order, same discipline as dim_mean's sorted
     collect). This is flat ADC — linear in n per query with ~128x less
     data touched than brute force; composing it with the IVF router
     (operators/similarity.py:ivf_topk) to scan only probed clusters'
@@ -2818,9 +2651,9 @@ def q_ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine to the final top-``_K``.
 
     Execution shape: the corpus floats are touched at build time and
-    then for |Q| x shortlist rows — never per ADC candidate (the
-    ``--pq-cell`` measures 98-99% of true top-5 surviving into a
-    100-wide shortlist at 40k vectors, i.e. ~100 float reads per query
+    then for |Q| x shortlist rows — never per ADC candidate (SCALING_r14.md
+    §6 / SCALING_r15.md §2 measured 98-99% of true top-5 surviving into
+    a 100-wide shortlist at 40k vectors, i.e. ~100 float reads per query
     instead of 40,000; dev registry width is 20). The shortlist pair
     set is broadcast onto the corpus scan, so the big side never
     shuffles for the rerank; emitted ``approx_dist`` preserves the
@@ -2883,20 +2716,18 @@ def _pq_adc_topk(
 ) -> DataFrame:
     """ADC top-k over a PQ-encoded corpus: per-(query, sub, code)
     distance table broadcast onto the code table, sub-ordered
-    sequential-fold sum, per-query rank. Factored so the
-    ``--pq-cell`` shortlist-recall measurement scores the exact
-    production plan at a different k."""
+    sequential-fold sum, per-query rank. Factored so q_ann_rerank's
+    shortlist and the tombstone over-fetch (tests/test_ivfpq_deletes.py)
+    score the exact production plan at a different k; the shortlist
+    recall it gives is recorded in SCALING_r14.md §6 and SCALING_r15.md
+    §2."""
     from pyspark.sql import Window
 
     dtab = qsub.join(F.broadcast(cb1), "sub").select(
         "query_id",
         "sub",
         "code_id",
-        F.aggregate(
-            F.zip_with(F.col("qsv"), F.col("cw"), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_d2"),
+        sq_dist(F.col("qsv"), F.col("cw")).alias("_d2"),
     )
     scored = codes.join(F.broadcast(dtab), ["sub", "code_id"]).filter(
         F.col("query_id") != F.col("vec_id")
@@ -3073,18 +2904,16 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     code table ⋈ broadcast lookup table — the corpus floats are touched
     only at the two build stages; search shuffles nothing wider than
     (query_id, neighbor_id, 4 doubles)."""
-    from pyspark.sql import Window
-
     raw = load_tables(spark, sf_dir, "embeddings")
     emb = raw.select("vec_id", as_double("embedding").alias("v")).localCheckpoint(
         eager=False
     )
-    supers, cmap, inv, assign = ivf_index(
+    supers, cmap, inv = ivf_index(
         raw, centroid_mod=None, lloyd_iters=1
     )
     cb1, codes = _pq_codebook_and_codes(spark, emb)
     queries = raw.filter(F.col("vec_id") % 100 == 0)
-    q = assign(
+    q = ivf_assign(
         queries.select(
             F.col("vec_id").alias("query_id"),
             as_double("embedding").alias("_qv"),
@@ -3097,23 +2926,37 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "_qn")
     )
-    qsub = _pq_subvectors(
-        queries.select("vec_id", as_double("embedding").alias("v"))
-    ).select(F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv"))
-    dtab = qsub.join(F.broadcast(cb1), "sub").select(
+    return _ivfpq_adc_topk(
+        cand,
+        queries.select("vec_id", as_double("embedding").alias("v")),
+        cb1,
+        codes,
+    )
+
+
+def _ivfpq_adc_topk(
+    cand: DataFrame, queries: DataFrame, codebook: DataFrame, codes: DataFrame
+) -> DataFrame:
+    """Top-``_K`` by ADC approximate COSINE over a probed candidate set
+    ``cand`` = (query_id, neighbor_id, _qn), for ``queries`` =
+    (vec_id, v): per-subspace dot products and codeword norms are table
+    lookups from the broadcast |Q| x _PQ_SUBS x _PQ_CODES table, folded
+    in sub order (deterministic summation), normalized by the exact
+    query norm and the quantized candidate norm. Pairs with a zero
+    denominator are dropped. Shared by q_ann_ivfpq (build + search) and
+    the serving path over loaded tables (:func:`_ivfpq_adc_serve`); each
+    builds its own candidate set."""
+    from pyspark.sql import Window  # noqa: PLC0415
+
+    qsub = _pq_subvectors(queries).select(
+        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
+    )
+    dtab = qsub.join(F.broadcast(codebook), "sub").select(
         "query_id",
         "sub",
         "code_id",
-        F.aggregate(
-            F.zip_with(F.col("qsv"), F.col("cw"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_dot"),
-        F.aggregate(
-            F.zip_with(F.col("cw"), F.col("cw"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_cn2"),
+        dot(F.col("qsv"), F.col("cw")).alias("_dot"),
+        dot(F.col("cw"), F.col("cw")).alias("_cn2"),
     )
     scored = cand.join(
         codes.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id"
@@ -3138,7 +2981,7 @@ def q_ann_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         # zero query vector or all-zero quantized candidate → undefined
-        # cosine: DROP the pair (mirrored in the oracle's HAVING) rather
+        # cosine: DROP the pair (mirrored in the oracles' HAVING) rather
         # than rank a NaN/Inf, where Spark and DuckDB null/NaN window
         # ordering can diverge (r14 ADVICE)
         .filter(F.col("_den") > 0)
@@ -3256,7 +3099,7 @@ def q_ann_ivfpq_deletes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     raw = load_tables(spark, sf_dir, "embeddings")
     corpus = raw.filter(F.col("vec_id") % 10 != 0)
-    supers, cmap, assigned, assign = ivf_index(
+    supers, cmap, assigned = ivf_index(
         corpus.select("vec_id", "embedding"),
         centroid_mod=_IVF_INCREMENTAL_MOD,
         lloyd_iters=1,
@@ -3375,7 +3218,7 @@ def _ivfpq_standing_frames(
     from the build path's."""
     raw = load_tables(spark, sf_dir, "embeddings")
     corpus = raw.filter(F.col("vec_id") % 10 != 0)
-    supers, cmap, inv, _assign = ivf_index(
+    supers, cmap, inv = ivf_index(
         corpus.select("vec_id", "embedding"),
         centroid_mod=_IVF_INCREMENTAL_MOD,
         lloyd_iters=1,
@@ -3451,8 +3294,6 @@ def _ivfpq_adc_serve(
     standing tables + broadcast joins — the corpus floats are never
     read and nothing wider than (query_id, neighbor_id, 4 doubles)
     shuffles."""
-    from pyspark.sql import Window  # noqa: PLC0415
-
     queries = (
         load_tables(spark, sf_dir, "embeddings")
         .filter(F.col("vec_id") % 100 == 0)
@@ -3471,68 +3312,7 @@ def _ivfpq_adc_serve(
         .join(F.broadcast(state["tombstones"]), "neighbor_id", "left_anti")
         .select("query_id", "neighbor_id", "_qn")
     )
-    qsub = _pq_subvectors(queries).select(
-        F.col("vec_id").alias("query_id"), "sub", F.col("sv").alias("qsv")
-    )
-    dtab = qsub.join(F.broadcast(state["codebook"]), "sub").select(
-        "query_id",
-        "sub",
-        "code_id",
-        F.aggregate(
-            F.zip_with(F.col("qsv"), F.col("cw"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_dot"),
-        F.aggregate(
-            F.zip_with(F.col("cw"), F.col("cw"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias("_cn2"),
-    )
-    scored = cand.join(
-        state["codes"].withColumnRenamed("vec_id", "neighbor_id"),
-        "neighbor_id",
-    ).join(F.broadcast(dtab), ["query_id", "sub", "code_id"])
-    agg = (
-        scored.groupBy("query_id", "neighbor_id")
-        .agg(
-            F.first("_qn").alias("_qn"),
-            F.array_sort(
-                F.collect_list(F.struct("sub", "_dot", "_cn2"))
-            ).alias("_arr"),
-        )
-        .withColumn(
-            "_den",
-            F.col("_qn")
-            * F.sqrt(
-                F.aggregate(
-                    F.col("_arr"),
-                    F.lit(0.0),
-                    lambda acc, s: acc + s["_cn2"],
-                )
-            ),
-        )
-        .filter(F.col("_den") > 0)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                F.aggregate(
-                    F.col("_arr"), F.lit(0.0), lambda acc, s: acc + s["_dot"]
-                )
-                / F.col("_den"),
-                6,
-            ).alias("approx_cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        agg.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= _K)
-        .select("query_id", "neighbor_id", "approx_cos", "rank")
-    )
+    return _ivfpq_adc_topk(cand, queries, state["codebook"], state["codes"])
 
 
 def q_ann_ivfpq_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3660,9 +3440,8 @@ def _blocked_assignment(emb: DataFrame) -> DataFrame:
     q_hard_negatives' contrastive scan). ONE definition so the blocking
     cannot drift between them; checkpointed because every consumer
     branches it into both sides of a pair join."""
-    centroids = _kmeans_recompute(_kmeans_assign(emb, _seed_centroids(emb)))
     return (
-        _kmeans_assign(emb, centroids)
+        _kmeans_assign(emb, _lloyd_centroids(emb))
         .select("vec_id", "v", "centroid_id")
         .withColumn("_n", norm(F.col("v")))
         .localCheckpoint(eager=False)
@@ -3814,7 +3593,6 @@ def _knn_graph_sharded_result(spark: SparkSession, emb: DataFrame) -> DataFrame:
 
     from gcp_healthcare_data_pipeline_spark.operators.similarity import (
         fanout_union,
-        hash_stratified_winners,
     )
 
     # the router count is a STATIC literal at test scale — a 1-row frame,
@@ -3832,7 +3610,7 @@ def _knn_graph_sharded_result(spark: SparkSession, emb: DataFrame) -> DataFrame:
     )
     es = (
         emb.crossJoin(F.broadcast(coarse))
-        .withColumn("_sd", _dist_between(F.col("v"), F.col("_cv")))
+        .withColumn("_sd", dist_between(F.col("v"), F.col("_cv")))
         .withColumn("_rn", F.row_number().over(wv))
         .filter(F.col("_rn") == 1)
         .select("vec_id", "v", "shard_id")

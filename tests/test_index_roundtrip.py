@@ -134,6 +134,7 @@ def test_list_compaction_preserves_filtered_search(spark, tmp_path):
         cosine_precomputed,
     )
     from gcp_healthcare_data_pipeline_spark.operators.similarity import (
+        ivf_assign,
         ivf_index,
     )
     from gcp_healthcare_data_pipeline_spark.operators.versioning import (
@@ -148,7 +149,7 @@ def test_list_compaction_preserves_filtered_search(spark, tmp_path):
 
     raw = load_tables(spark, SF_DIR, "embeddings")
     corpus = raw.filter(F.col("vec_id") % 10 != 0)
-    supers, cmap, inv, assign = ivf_index(
+    supers, cmap, inv = ivf_index(
         corpus.select("vec_id", "embedding"), centroid_mod=64, lloyd_iters=1
     )
     inv = inv.localCheckpoint(eager=True)  # the standing lists
@@ -198,7 +199,7 @@ def test_list_compaction_preserves_filtered_search(spark, tmp_path):
     )
 
     def _search(lists, tombstones):
-        q = assign(
+        q = ivf_assign(
             corpus.filter(F.col("vec_id") % 100 == 51)
             .limit(5)
             .select(

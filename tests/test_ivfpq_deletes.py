@@ -98,7 +98,7 @@ def test_tombstone_filtered_adc_search_excludes_deleted(spark):
 
 def test_code_compaction_preserves_filtered_search(spark, tmp_path):
     corpus, cb1, codes, tomb, qsub = _fixture(spark)
-    _s, _c, assigned, _a = ivf_index(
+    _s, _c, assigned = ivf_index(
         corpus.select("vec_id", "embedding"),
         centroid_mod=_IVF_INCREMENTAL_MOD,
         lloyd_iters=1,

@@ -41,8 +41,7 @@ def test_semdedup_never_crosses_clusters(spark):
     # (drop, keep) pair shares it
     from gcp_healthcare_data_pipeline_spark.queries.vector_queries import (
         _kmeans_assign,
-        _kmeans_recompute,
-        _seed_centroids,
+        _lloyd_centroids,
     )
     from gcp_healthcare_data_pipeline_spark.functions.vectors import as_double
 
@@ -50,10 +49,9 @@ def test_semdedup_never_crosses_clusters(spark):
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
         .select("vec_id", as_double("embedding").alias("v"))
     )
-    # same corpus-size-derived seeds q_semdedup starts from
-    centroids = _seed_centroids(emb)
-    # same one-Lloyd-round refinement q_semdedup blocks on
-    centroids = _kmeans_recompute(_kmeans_assign(emb, centroids))
+    # same corpus-size-derived seeds and one-Lloyd-round refinement
+    # q_semdedup blocks on
+    centroids = _lloyd_centroids(emb)
     cluster = {
         r.vec_id: r.centroid_id
         for r in _kmeans_assign(emb, centroids).collect()

@@ -1,13 +1,21 @@
-"""Similarity-search operator tests: exactness of brute force, recall of LSH."""
+"""Similarity-search operator tests: exactness of brute force, recall of
+LSH, and the nearest-centroid assignment (k-means and IVF) built on
+``argmin_fold``."""
 
 from __future__ import annotations
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
+from gcp_healthcare_data_pipeline_spark.functions.vectors import (
+    argmin_fold,
+    norm,
+)
 from gcp_healthcare_data_pipeline_spark.operators.similarity import (
     brute_force_topk,
+    ivf_assign,
     lsh_bucket_topk,
 )
 
@@ -105,7 +113,6 @@ def test_lsh_probe_depth_zero_rejected(spark):
     from gcp_healthcare_data_pipeline_spark.operators.similarity import (
         lsh_bucket_topk,
     )
-    import pytest
 
     emb = _emb(spark)
     queries = emb.filter(F.col("vec_id") % 50 == 0)
@@ -140,7 +147,7 @@ def test_kmeans_block_count_scales_with_corpus(spark):
         assert vq._derived_k(emb).collect()[0]["_k"] == expect_k
         cent = vq._seed_centroids(emb)
         assert cent.count() == min(expect_k, n)
-        refined = vq._kmeans_recompute(vq._kmeans_assign(emb, cent))
+        refined = vq._lloyd_centroids(emb)
         assigned = vq._kmeans_assign(emb, refined)
         sizes = [
             r["cnt"]
@@ -185,64 +192,83 @@ def test_ivf_adaptive_mod_scales_centroids(spark):
     assert len(rows) == 4 * 3
 
 
-def test_near_identical_supers_drop_no_vectors(spark):
+@pytest.mark.parametrize("metric", ["l2", "cosine"])
+def test_near_identical_supers_drop_no_vectors(spark, metric):
     """Regression (r12 review finding): two NEAR-identical vectors both
-    hash-chosen as super-centroids tie at rounded distance 0.000000 in
-    the centroid->super map; without the self-preference tie-break the
+    hash-chosen as super-centroids tie at the rounded metric (distance
+    0.000000 for k-means, cosine 1.000000 for IVF) in the
+    centroid->super map; without the self-preference tie-break the
     higher-id super maps under the lower one, ends up CHILDLESS, and
-    any vector whose 6dp-rounded distance strictly prefers it VANISHES
+    any vector whose rounded metric strictly prefers it VANISHES
     through the inner child join. This fixture constructs that exact
     geometry against the real hash-derived seeds/supers of a 500-id
-    corpus (seeds 138..433, supers {168, 363} — pure md5 arithmetic,
-    stable by construction) and asserts the every-vector-assigned
-    contract plus the discriminating routing."""
+    corpus (k-means: hash-stratified seeds; IVF: every 5th id) — pure
+    md5 arithmetic, stable by construction — and asserts the
+    every-vector-assigned contract plus the discriminating routing."""
     import hashlib
 
+    from gcp_healthcare_data_pipeline_spark.operators.similarity import (
+        ivf_index,
+    )
     from gcp_healthcare_data_pipeline_spark.queries import (
         vector_queries as vq,
     )
 
-    n, dims = 500, 8
+    n, dims, mod = 500, 8, 5
 
     def h(i: int) -> int:
         return int(hashlib.md5(str(i).encode()).hexdigest()[:12], 16)
 
-    k = max(
-        vq._KMEANS_K_MIN,
-        math.ceil(n / max(1, vq._TARGET_BLOCK_FLOATS // dims)),
-    )
-    buckets: dict = {}
-    for i in range(n):
-        b = h(i) % k
-        if b not in buckets or (h(i), i) < buckets[b]:
-            buckets[b] = (h(i), i)
-    seeds = sorted(i for _, i in buckets.values())
-    m = max(1, math.ceil(math.sqrt(k)))
-    sb: dict = {}
-    for c in seeds:
-        b = h(c) % m
-        if b not in sb or (h(c), c) < sb[b]:
-            sb[b] = (h(c), c)
-    supers = sorted(c for _, c in sb.values())
+    def winners(ids, m: int) -> list:
+        best: dict = {}
+        for i in ids:
+            b = h(i) % m
+            if b not in best or (h(i), i) < best[b]:
+                best[b] = (h(i), i)
+        return sorted(i for _, i in best.values())
+
+    if metric == "l2":
+        k = max(
+            vq._KMEANS_K_MIN,
+            math.ceil(n / max(1, vq._TARGET_BLOCK_FLOATS // dims)),
+        )
+        seeds = winners(range(n), k)
+        m = max(1, math.ceil(math.sqrt(k)))
+        # A at the origin; B rounds to distance 0.000000 of A; w is
+        # 4e-7 from B (rounds 0.000000) and 6e-7 from A (rounds
+        # 0.000001): it strictly prefers super B
+        a_vec, b_vec, w_vec = [0.0], [2e-7], [6e-7]
+    else:
+        seeds = [i for i in range(n) if i % mod == 0]
+        m = max(1, math.ceil(math.sqrt(len(seeds))))
+        # cos(A, B) = 0.9999996 rounds to 1.000000; w has rounded cosine
+        # 1.000000 to B and 0.999999 to A: it strictly prefers super B
+        a_vec, b_vec, w_vec = [1.0, 0.0], [1.0, 9e-4], [1.0, 1.45e-3]
+    supers = winners(seeds, m)
     assert len(supers) >= 2, "fixture degenerate: need two supers"
     sup_a, sup_b = supers[0], supers[1]
     w_id = next(i for i in range(n) if i not in seeds)
+    special = {sup_a: a_vec, sup_b: b_vec, w_id: w_vec}
 
     def vec(i: int) -> list:
-        if i == sup_a:
-            return [0.0] * dims
-        if i == sup_b:
-            return [2e-7] + [0.0] * (dims - 1)  # rounds to dist 0.0 of A
-        if i == w_id:
-            # dist to B = 4e-7 -> rounds 0.000000; dist to A = 6e-7 ->
-            # rounds 0.000001: strictly prefers super B
-            return [6e-7] + [0.0] * (dims - 1)
-        return [1000.0 + i, float(i % 7)] + [0.0] * (dims - 2)
+        if i in special:
+            return special[i] + [0.0] * (dims - len(special[i]))
+        # far from A, B and w under either metric
+        return [0.0, 0.0, 1000.0 + i, float(i % 7)] + [0.0] * (dims - 4)
 
     rows = [(i, vec(i)) for i in range(n)]
-    emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
-    assigned = vq._kmeans_assign(emb, vq._seed_centroids(emb))
-    got = {r["vec_id"]: r["centroid_id"] for r in assigned.collect()}
+    if metric == "l2":
+        emb = spark.createDataFrame(rows, "vec_id long, v array<double>")
+        assigned = vq._kmeans_assign(emb, vq._seed_centroids(emb))
+        got = {r["vec_id"]: r["centroid_id"] for r in assigned.collect()}
+    else:
+        emb = spark.createDataFrame(
+            rows, "vec_id long, embedding array<double>"
+        )
+        _s, _c, assigned = ivf_index(emb, centroid_mod=mod)
+        got = {
+            r["neighbor_id"]: r["centroid_id"] for r in assigned.collect()
+        }
     assert len(got) == n, f"vectors dropped: {n - len(got)}"
     # the discriminating row: w routes to super B and must find B there
     assert got[w_id] == sup_b
@@ -328,7 +354,6 @@ def test_ivf_validate_ids_rejects_duplicates(spark):
     aggregation (first(payload) per id group). validate_ids=True makes
     that corpus fail loudly at execution time; on a unique-id corpus the
     validated plan returns the identical result."""
-    import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.base import PySparkException
 
@@ -354,3 +379,89 @@ def test_ivf_validate_ids_rejects_duplicates(spark):
         (Py4JJavaError, PySparkException), match="duplicate vec_id"
     ):
         ivf_topk(dup, queries, k=3, centroid_mod=31, validate_ids=True).collect()
+
+
+def test_argmin_fold_equals_array_min_transform(spark):
+    """argmin_fold equals array_min(transform(...)) on every regime the
+    packed argmin folds see: ties, NaN distances, empty and NULL
+    candidate arrays."""
+    rows = [
+        # (id, candidate array of (i, d-key)) — keys engineered for ties,
+        # NaN (sorts greatest), and identical distances with id tie-break
+        (1, [(3, 2.0), (1, 2.0), (2, 5.0)]),          # tie on d -> min i
+        (2, [(7, float("nan")), (8, 1.0)]),            # NaN loses
+        (3, [(9, float("nan"))]),                      # all-NaN: NaN wins
+        (4, []),                                       # empty -> NULL
+        (5, None),                                     # NULL arr -> NULL
+    ]
+    df = spark.createDataFrame(
+        rows, "id int, arr array<struct<i:int,d:double>>"
+    )
+    mk = lambda s: F.struct(s["d"].alias("d"), s["i"].alias("i"))  # noqa: E731
+    got = df.select(
+        "id",
+        argmin_fold(F.col("arr"), mk).alias("fold"),
+        F.array_min(F.transform(F.col("arr"), mk)).alias("ref"),
+    ).collect()
+
+    def eq(a, b):  # NaN-aware struct equality (nan != nan in Python)
+        if a is None or b is None:
+            return a is None and b is None
+        return all(
+            (x != x and y != y) or x == y for x, y in zip(a, b)
+        )
+
+    for r in got:
+        assert eq(r["fold"], r["ref"]), (r["id"], r["fold"], r["ref"])
+
+
+def test_argmin_fold_skips_null_elements_like_array_min(spark):
+    df = spark.createDataFrame(
+        [(1, [None, (2, 1.5), None, (1, 1.5)])],
+        "id int, arr array<struct<i:int,d:double>>",
+    )
+    mk = lambda s: F.struct(s["d"].alias("d"), s["i"].alias("i"))  # noqa: E731
+    r = df.select(
+        argmin_fold(F.col("arr"), mk).alias("fold"),
+        F.array_min(F.transform(F.col("arr"), mk)).alias("ref"),
+    ).collect()[0]
+    # transform maps a NULL element to a struct of NULL fields; both
+    # forms then order NULL fields the same way — assert lockstep
+    assert r["fold"] == r["ref"]
+
+
+def _mini_index(spark):
+    """Two supers, two children each, unit-ish vectors: super 10 owns
+    children 10/11 near +x, super 20 owns children 20/21 near +y."""
+    sup = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (20, [0.0, 1.0])], "super_id bigint, _sv array<double>"
+    ).withColumn("_sn", norm(F.col("_sv")))
+    cmap = spark.createDataFrame(
+        [
+            (10, [1.0, 0.0], 10),
+            (11, [0.9, 0.1], 10),
+            (20, [0.0, 1.0], 20),
+            (21, [0.1, 0.9], 20),
+        ],
+        "centroid_id bigint, _cv array<double>, super_id bigint",
+    ).withColumn("_ccn", norm(F.col("_cv")))
+    return sup, cmap
+
+
+def test_ivf_assign_keep1_multiprobe_reduces_across_supers(spark):
+    """ivf_assign's keep==1 fast path is gated on super_keep==1 (r17
+    ADVICE): keep==1 with super_keep>1 must reduce across the probed
+    supers like the window path always did."""
+    sup, cmap = _mini_index(spark)
+    # query halfway between the supers, slightly x-leaning: with
+    # super_keep=2 BOTH supers are probed and the single global best
+    # child must come back (one row, centroid 10) — not one per super
+    q = spark.createDataFrame(
+        [(1, [0.8, 0.6])], "qid bigint, _qv array<double>"
+    ).withColumn("_qn", norm(F.col("_qv")))
+    out = ivf_assign(q, "_qv", "_qn", 1, sup, cmap, super_keep=2).collect()
+    assert len(out) == 1, out
+    assert out[0]["centroid_id"] == 11  # cos 0.8614, the global best
+    # and the fast path (super_keep=1) still routes+assigns one row
+    out1 = ivf_assign(q, "_qv", "_qn", 1, sup, cmap, super_keep=1).collect()
+    assert len(out1) == 1 and out1[0]["centroid_id"] == 11

@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from gcp_healthcare_data_pipeline_spark.operators.versioning import (
@@ -14,6 +15,7 @@ from gcp_healthcare_data_pipeline_spark.operators.versioning import (
     list_versions,
     read_version,
     write_version,
+    write_versions_concurrently,
 )
 
 
@@ -250,3 +252,25 @@ def test_runner_gc_keeps_retained_manifests_resolvable(spark, tmp_path):
         tables = read_snapshot_tables(spark, root, run_id)
         for name, df in tables.items():
             df.count()  # must not raise FileNotFoundError
+
+
+def test_write_versions_concurrently_aggregates_failures(spark, tmp_path):
+    """write_versions_concurrently settles ALL writes and raises one
+    aggregated error on partial failure (r17 ADVICE)."""
+    ok = spark.range(3).select(F.col("id").alias("k"))
+    bad = spark.range(3).select(
+        F.assert_true(F.col("id") < 0, F.lit("boom")).alias("x"), "id"
+    )
+    with pytest.raises(RuntimeError) as ei:
+        write_versions_concurrently(
+            {
+                "good": (ok, os.path.join(str(tmp_path), "good"), {}),
+                "bad": (bad, os.path.join(str(tmp_path), "bad"), {}),
+            }
+        )
+    msg = str(ei.value)
+    assert "bad" in msg and "1 table write(s) failed" in msg
+    # the sibling write settled (not cancelled): its version committed
+    # and is named as an orphan pin in the error
+    assert "good" in msg
+    assert list_versions(os.path.join(str(tmp_path), "good")) == [0]

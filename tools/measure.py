@@ -434,8 +434,9 @@ def _copy_level(spark, src_sf: str, copies: int) -> str:
             cols["s_name"] = F.concat("s_name", F.lit(f"#{i}{i}"))
         elif table == "embeddings":
             signs = F.array(*[F.lit(s) for s in _sign_flips(span["doc"], i, dims)])
-            cols["embedding"] = F.zip_with(
-                "embedding", signs, lambda x, s: (x * s).cast("float"))
+            cols["embedding"] = F.transform(
+                "embedding",
+                lambda x, j: (x * F.element_at(signs, j + 1)).cast("float"))
         return cols
 
     for t, df in frames.items():
