@@ -25,11 +25,17 @@ of the data itself.
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+from gcp_healthcare_data_pipeline_spark.concurrency import (
+    MAX_WORKERS,
+    settle_all,
+)
 
 _VDIR = re.compile(r"^v=(\d{6})$")
 _POINTER = "_LATEST"
@@ -99,7 +105,7 @@ def write_version(
 
 def write_versions_concurrently(
     jobs: "dict[str, tuple[DataFrame, str, dict]]",
-    max_workers: int = 3,
+    max_workers: int = MAX_WORKERS,
 ) -> dict[str, int]:
     """Commit several INDEPENDENT tables' versions at once from a small
     driver thread pool: ``jobs`` maps table name -> (frame, path,
@@ -121,27 +127,21 @@ def write_versions_concurrently(
     first-materialization (block-level locking: one job computes a
     cached partition, the others wait).
 
-    Failure contract (r17 ADVICE): every submitted write runs to
-    completion (success or failure) before this returns — a partial
-    failure raises ONE aggregated error naming every failed table, and
-    the error message lists the sibling tables whose per-table versions
-    DID commit (they become unreferenced pins/orphans: the caller never
-    writes the snapshot manifest, so no reader can observe them, and
-    the next successful commit's retention sweep reclaims them)."""
-    from concurrent.futures import ThreadPoolExecutor  # noqa: PLC0415
-
-    with ThreadPoolExecutor(max_workers=min(max_workers, len(jobs) or 1)) as pool:
-        futures = {
-            table: pool.submit(write_version, frame, path, **kwargs)
+    Failure contract (:func:`concurrency.settle_all`): every submitted
+    write runs to completion (success or failure) before this returns —
+    a partial failure raises ONE aggregated error naming every failed
+    table, and the error message lists the sibling tables whose
+    per-table versions DID commit (they become unreferenced
+    pins/orphans: the caller never writes the snapshot manifest, so no
+    reader can observe them, and the next successful commit's retention
+    sweep reclaims them)."""
+    results, failures = settle_all(
+        {
+            table: functools.partial(write_version, frame, path, **kwargs)
             for table, (frame, path, kwargs) in jobs.items()
-        }
-        results: dict[str, int] = {}
-        failures: dict[str, BaseException] = {}
-        for table, fut in futures.items():
-            try:
-                results[table] = fut.result()
-            except BaseException as exc:  # noqa: BLE001 — aggregate, re-raise
-                failures[table] = exc
+        },
+        max_workers,
+    )
     if failures:
         failed = ", ".join(f"{t}: {e}" for t, e in sorted(failures.items()))
         committed = ", ".join(sorted(results)) or "none"

@@ -8,18 +8,22 @@ structured events.
 Rows are BUFFERED on the driver and flushed as one batched append per
 pipeline stage (``flush()``), not one Spark job per row — a full run
 emits dozens of control rows, and a per-row ``createDataFrame().write``
-costs a whole job each (~0.3-0.5 s of pure scheduling). Reads
-(``last_watermark``, ``read``) flush first, so visibility semantics are
-identical to write-through: a recorded row is always observable by any
-subsequent read through the same ledger, and prior runs' rows are always
-on disk. The tradeoff vs the reference's per-event BigQuery insert is
-crash durability of the CURRENT stage's buffer — acceptable for a
-control table that is rebuilt by rerunning the idempotent stage.
+costs a whole job each (~0.3-0.5 s of pure scheduling). ``read()``
+flushes first. ``last_watermark`` does not: its first call loads every
+(source, table) watermark with one grouped aggregate over the flushed
+rows, folds in the rows still buffered, and caches the map; ``record``
+keeps the map current. A recorded success is therefore visible to every
+later watermark lookup through the same ledger without a flush, and
+prior runs' rows are always on disk. The tradeoff vs the reference's
+per-event BigQuery insert is crash durability of the CURRENT stage's
+buffer — acceptable for a control table that is rebuilt by rerunning
+the idempotent stage.
 """
 
 from __future__ import annotations
 
 import os
+import threading
 import traceback
 from datetime import datetime, timezone
 
@@ -65,6 +69,11 @@ class _BufferedAppender:
 class AuditLedger(_BufferedAppender):
     def __init__(self, spark: SparkSession, root: str):
         super().__init__(spark, os.path.join(root, "audit_log"), AUDIT_LOG)
+        # (data_source, tablename) -> last successful load_timestamp;
+        # None until the first lookup. Landing threads look up at once,
+        # so the load and every update hold the lock.
+        self._watermarks: dict[tuple[str, str], datetime] | None = None
+        self._lock = threading.Lock()
 
     def record(
         self,
@@ -79,22 +88,36 @@ class AuditLedger(_BufferedAppender):
         self._buf.append(
             (data_source, tablename, load_type, record_count, when, status)
         )
+        if status == "success":
+            with self._lock:
+                if self._watermarks is not None:
+                    self._advance((data_source, tablename), when)
+
+    def _advance(self, key: tuple[str, str], when: datetime) -> None:
+        prev = self._watermarks.get(key)
+        if prev is None or when > prev:
+            self._watermarks[key] = when
 
     def last_watermark(self, data_source: str, tablename: str):
-        """MAX(load_timestamp) of successful loads for (source, table)."""
-        self.flush()
-        if not self._exists():
-            return None
-        return (
-            self.read()
-            .filter(
-                (F.col("data_source") == data_source)
-                & (F.col("tablename") == tablename)
-                & (F.col("status") == "success")
-            )
-            .agg(F.max("load_timestamp"))
-            .first()[0]
-        )
+        """MAX(load_timestamp) of successful loads for (source, table).
+        Only the first call runs a Spark job (see the module docstring)."""
+        with self._lock:
+            if self._watermarks is None:
+                self._watermarks = {}
+                if self._exists():
+                    rows = (
+                        self.spark.read.schema(self.schema)
+                        .parquet(self.path)
+                        .filter(F.col("status") == "success")
+                        .groupBy("data_source", "tablename")
+                        .agg(F.max("load_timestamp"))
+                        .collect()
+                    )
+                    self._watermarks = {(r[0], r[1]): r[2] for r in rows}
+                for ds, table, _, _, when, status in self._buf:
+                    if status == "success":
+                        self._advance((ds, table), when)
+            return self._watermarks.get((data_source, tablename))
 
 
 class PipelineLogger(_BufferedAppender):

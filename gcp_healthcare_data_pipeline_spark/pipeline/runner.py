@@ -12,20 +12,32 @@ SCD2 in silver, truncate-and-reload gold marts.
 
 Scale posture: all stage boundaries are parquet (restartable, columnar,
 partition-prunable); no toPandas/collect on data paths — the only driver
-round-trips are scalar watermark lookups and the config loop, both O(1).
+round-trips are the config loop and one grouped watermark read per run,
+both O(tables).
+
+Job posture: at local scale a run is bound by per-job scheduling, not
+data, so the runner spends no job on bookkeeping. Row counts ride along
+each write as an ``Observation``; a table this run wrote is read back
+under the schema it was written with, so no schema-inference job runs;
+and the independent tables of each zone are written from a bounded
+driver thread pool (``concurrency.run_all``), so one write's task tail
+overlaps the next write's planning.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 import shutil
 import time
 from dataclasses import dataclass
 from datetime import datetime
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
+from gcp_healthcare_data_pipeline_spark.concurrency import run_all
 from gcp_healthcare_data_pipeline_spark.operators.scd2 import (
     scd2_initial,
     scd2_merge,
@@ -55,6 +67,15 @@ from gcp_healthcare_data_pipeline_spark.sources.writers import (
     archive_landing_files,
     write_landing_json,
 )
+
+
+def _observed(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count riding along its next action: after the
+    write, ``obs.get["n"]`` replaces a separate ``count()`` job. The
+    action must run on the returned frame itself (an Observation on a
+    lazily ``localCheckpoint``ed frame reads ``{'n': 0}``)."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 @dataclass
@@ -94,28 +115,48 @@ class Runner:
         self.gold_retain = gold_retain
         self.ledger = AuditLedger(spark, os.path.join(warehouse, "control"))
         self.logger = PipelineLogger(spark, os.path.join(warehouse, "control"))
+        # path -> schema of every zone table this run wrote (see _read)
+        self._schemas: dict[str, StructType] = {}
 
     # -- path helpers ------------------------------------------------------
     def _zone(self, *parts: str) -> str:
         return os.path.join(self.warehouse, *parts)
 
-    def _write_replace(self, df: DataFrame, path: str) -> None:
+    def _read(self, path: str, schema: StructType | None = None) -> DataFrame:
+        """Parquet read of a zone table. A table this run wrote is read
+        under the schema it was written with (or under ``schema``), so no
+        schema-inference job runs; any other table is inferred."""
+        schema = schema or self._schemas.get(path)
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(path)
+
+    def _write_replace(self, df: DataFrame, path: str) -> int:
         """Safe overwrite even when ``df`` reads from ``path``: write to a
         temp dir, then swap. (INSERT OVERWRITE onto your own input loses
-        the data in plain-parquet Spark.)"""
+        the data in plain-parquet Spark.) Returns the rows written."""
+        df, obs = _observed(df)
         tmp = path + ".tmp"
         df.write.mode("overwrite").parquet(tmp)
         if os.path.isdir(path):
             shutil.rmtree(path)
         os.replace(tmp, path)
+        self._schemas[path] = df.schema
+        return obs.get["n"]
 
     def _ts(self) -> F.Column:
         """Injectable CURRENT_TIMESTAMP (deterministic tests, SURVEY §7)."""
         return F.lit(self.clock.strftime("%Y-%m-%d %H:%M:%S")).cast("timestamp")
 
     # -- stage 1: config-driven landing ingest (EP2) -----------------------
-    def _land_table(self, sources: SourcePaths, row, attempt: int = 1) -> int:
-        """Land one config row; returns row count. Raises on failure."""
+    def _land_table(
+        self, sources: SourcePaths, row, attempt: int = 1, log=None
+    ) -> int:
+        """Land one config row; returns row count. Raises on failure.
+        ``log`` takes the table's pipeline-log calls (default: the run's
+        logger)."""
+        log = log or self.logger.log
         ds, table = row["datasource"], row["tablename"]
         src_path = sources.emr[ds][table]
         schema = EMR_TABLES[table][ds]
@@ -125,7 +166,7 @@ class Runner:
             # DRIFT control row per (source, table, load) naming exactly
             # which declared columns the header dropped and which novel
             # columns it added (the hospital-B Updated_Date case)
-            self.logger.log(
+            log(
                 "DRIFT",
                 f"header drift: missing={drift['missing']} "
                 f"unexpected={drift['unexpected']}",
@@ -149,94 +190,124 @@ class Runner:
             # attempt, not prior-run data (that was archived on attempt 1)
             # — wipe it rather than pollute the dated archive with it
             shutil.rmtree(landing, ignore_errors=True)
-        # count the frame we are about to write — NOT a re-read of the
-        # landing sink, which would cost an extra scan + JSON schema
-        # inference per table per run
-        n = df.count()
+        # count the frame as it is written — neither a count() job before
+        # the write nor a re-read of the landing sink (an extra scan +
+        # JSON schema inference per table per run)
+        df, obs = _observed(df)
         write_landing_json(df, landing)
-        return n
+        return obs.get["n"]
+
+    def _land_with_retries(self, sources: SourcePaths, row) -> list[tuple]:
+        """Land one config row under the retry policy (C6: a failure is
+        recorded, never raised). Returns the table's control-table calls
+        as ``(method, args, kwargs)`` for the caller to apply in config
+        order."""
+        ds, table = row["datasource"], row["tablename"]
+        load_type = (row["loadtype"] or "Full").strip()
+        calls: list[tuple] = []
+
+        def log(*args, **kwargs):
+            calls.append((self.logger.log, args, kwargs))
+
+        def record(*args):
+            calls.append((self.ledger.record, args, {}))
+
+        attempts = 1 + max(0, self.retries)
+        for attempt in range(1, attempts + 1):
+            try:
+                n = self._land_table(sources, row, attempt, log)
+                record(ds, table, load_type, n, "success", self.clock)
+                log("INFO", f"landed {n} rows", "landing", table)
+                break
+            except Exception as e:
+                if attempt < attempts:
+                    log(
+                        "WARN",
+                        f"attempt {attempt} failed, retrying: {e}",
+                        "landing", table,
+                    )
+                    if self.retry_delay_s:
+                        time.sleep(self.retry_delay_s)
+                    continue
+                # C6: isolate per-table failures; one audit row per load
+                record(ds, table, load_type, 0, "failed", self.clock)
+                log("ERROR", str(e), "landing", table, error=e)
+        return calls
 
     def ingest_to_landing(self, sources: SourcePaths) -> None:
         config = read_csv(self.spark, sources.load_config, LOAD_CONFIG)
         active = config.filter(F.col("is_active") == "1").collect()  # C1 loop
-        for row in active:
-            ds, table = row["datasource"], row["tablename"]
-            load_type = (row["loadtype"] or "Full").strip()
-            attempts = 1 + max(0, self.retries)
-            for attempt in range(1, attempts + 1):
-                try:
-                    n = self._land_table(sources, row, attempt)
-                    self.ledger.record(
-                        ds, table, load_type, n, "success", self.clock
-                    )
-                    self.logger.log("INFO", f"landed {n} rows", "landing", table)
-                    break
-                except Exception as e:
-                    if attempt < attempts:
-                        self.logger.log(
-                            "WARN",
-                            f"attempt {attempt} failed, retrying: {e}",
-                            "landing", table,
-                        )
-                        if self.retry_delay_s:
-                            time.sleep(self.retry_delay_s)
-                        continue
-                    # C6: isolate per-table failures; one audit row per load
-                    self.ledger.record(
-                        ds, table, load_type, 0, "failed", self.clock,
-                    )
-                    self.logger.log(
-                        "ERROR", str(e), "landing", table, error=e
-                    )
+        # tables land concurrently; their control rows are applied in
+        # config order once all have settled, so audit_log and
+        # pipeline_logs keep a deterministic row order
+        calls = run_all({
+            i: functools.partial(self._land_with_retries, sources, row)
+            for i, row in enumerate(active)
+        })
+        for i in range(len(active)):
+            for method, args, kwargs in calls[i]:
+                method(*args, **kwargs)
         # one batched control-table append for the whole landing stage
         self.ledger.flush()
         self.logger.flush()
 
     # -- stage 2: bronze ---------------------------------------------------
     def build_bronze(self, sources: SourcePaths) -> None:
-        # EMR: landing JSON -> bronze parquet (schema-on-read, bronze.sql)
+        def emr(ds: str, table: str) -> None:
+            # landing JSON -> bronze parquet (schema-on-read, bronze.sql)
+            schema = EMR_TABLES.get(table, {}).get(ds)
+            reader = self.spark.read
+            if schema is not None:
+                # declared schema: stable columns even for empty deltas,
+                # and no inference scan over the landing
+                reader = reader.schema(schema)
+            df = reader.json(self._zone("landing", ds, table))
+            if df.columns:  # else an unknown-table empty delta: keep bronze
+                self._write_replace(df, self._zone("bronze", ds, table))
+
+        def claims() -> None:
+            # glob CSV scan + filename provenance tag + dedup
+            # (claims.py:11-25)
+            df = read_csv(self.spark, sources.claims_glob, CLAIMS)
+            df = df.withColumn(
+                "datasource",
+                F.when(F.input_file_name().contains("hospital1"), "hospital1")
+                .when(F.input_file_name().contains("hospital2"), "hospital2")
+                .otherwise("unknown"),
+            ).dropDuplicates()
+            self._write_replace(df, self._zone("bronze", "claims"))
+
+        def cptcodes() -> None:
+            # header normalization (cpt_codes.py:18-20)
+            cpt = normalize_cpt_headers(
+                read_csv(self.spark, sources.cptcodes, CPT_CODES_RAW)
+            )
+            self._write_replace(cpt, self._zone("bronze", "cptcodes"))
+
+        writes = {}
         landing_root = self._zone("landing")
         if os.path.isdir(landing_root):
             for ds in sorted(os.listdir(landing_root)):
                 for table in sorted(os.listdir(os.path.join(landing_root, ds))):
                     if table == "archive":
                         continue
-                    schema = EMR_TABLES.get(table, {}).get(ds)
-                    reader = self.spark.read
-                    if schema is not None:
-                        # declared schema: stable columns even for empty
-                        # deltas, and no inference scan over the landing
-                        reader = reader.schema(schema)
                     path = self._zone("landing", ds, table)
-                    # empty-delta landing dirs have no JSON part files;
-                    # skip them up front (a bare read would raise an
-                    # AnalysisException that Spark logs with a full
-                    # ERROR stack trace even when handled)
-                    if not any(
+                    # a landing dir without JSON part files (its load
+                    # failed after the archive step) is skipped up front:
+                    # a bare read would raise an AnalysisException that
+                    # Spark logs with a full ERROR stack trace even when
+                    # handled. An empty delta still writes one empty
+                    # part file, so its bronze table is rewritten empty.
+                    if any(
                         f.endswith(".json") or f.startswith("part-")
                         for f in os.listdir(path)
                     ):
-                        continue
-                    df = reader.json(path)
-                    if not df.columns:
-                        # unknown-table empty delta: keep existing bronze
-                        continue
-                    self._write_replace(df, self._zone("bronze", ds, table))
-        # claims: glob CSV scan + filename provenance tag + dedup
-        # (claims.py:11-25)
-        claims = read_csv(self.spark, sources.claims_glob, CLAIMS)
-        claims = claims.withColumn(
-            "datasource",
-            F.when(F.input_file_name().contains("hospital1"), "hospital1")
-            .when(F.input_file_name().contains("hospital2"), "hospital2")
-            .otherwise("unknown"),
-        ).dropDuplicates()
-        self._write_replace(claims, self._zone("bronze", "claims"))
-        # cptcodes: header normalization (cpt_codes.py:18-20)
-        cpt = normalize_cpt_headers(
-            read_csv(self.spark, sources.cptcodes, CPT_CODES_RAW)
-        )
-        self._write_replace(cpt, self._zone("bronze", "cptcodes"))
+                        writes[f"bronze/{ds}/{table}"] = functools.partial(
+                            emr, ds, table
+                        )
+        writes["bronze/claims"] = claims
+        writes["bronze/cptcodes"] = cptcodes
+        run_all(writes)
 
     # -- stage 3: silver (conform + quarantine + SCD2) ---------------------
     def _silver_apply(self, name: str, staged: DataFrame) -> None:
@@ -251,7 +322,9 @@ class Runner:
             c for c in data_cols if c != spec.key_col and c not in spec.tracked
         ]
         if os.path.isdir(path):
-            target = self.spark.read.parquet(path)
+            # the target was written under the staged columns plus the
+            # SCD2 ones, which is scd2_initial's output schema
+            target = self._read(path, scd2_initial(staged, self._ts()).schema)
             merged = scd2_merge(
                 target.select(*data_cols, "inserted_date", "modified_date",
                               "is_current"),
@@ -266,40 +339,39 @@ class Runner:
         self._write_replace(merged, path)
 
     def build_silver(self) -> None:
-        def bronze(ds: str, table: str) -> DataFrame:
-            return self.spark.read.parquet(self._zone("bronze", ds, table))
+        def bronze(*parts: str) -> DataFrame:
+            return self._read(self._zone("bronze", *parts))
 
-        for name in ("patients", "encounters", "transactions", "providers",
-                     "departments"):
-            spec = ENTITIES[name]
-            branches = [
-                conform_source(bronze(ds, name), spec, ds)
+        staged = {
+            name: conform_union([
+                conform_source(bronze(ds, name), ENTITIES[name], ds)
                 for ds in ("hospital_a_db", "hospital_b_db")
-            ]
-            self._silver_apply(name, conform_union(branches))
-
+            ])
+            for name in ("patients", "encounters", "transactions",
+                         "providers", "departments")
+        }
         # claims: branches keyed by provenance tag, not separate files
-        claims = self.spark.read.parquet(self._zone("bronze", "claims"))
-        spec = ENTITIES["claims"]
-        branches = [
+        claims = bronze("claims")
+        staged["claims"] = conform_union([
             conform_source(
                 claims.filter(F.col("datasource") == ds).drop("datasource"),
-                spec, ds,
+                ENTITIES["claims"], ds,
             )
             for ds in ("hospital1", "hospital2")
-        ]
-        self._silver_apply("claims", conform_union(branches))
-
-        cpt = self.spark.read.parquet(self._zone("bronze", "cptcodes"))
-        self._silver_apply(
-            "cpt_codes",
-            conform_source(cpt, ENTITIES["cpt_codes"], "cptcodes"),
+        ])
+        staged["cpt_codes"] = conform_source(
+            bronze("cptcodes"), ENTITIES["cpt_codes"], "cptcodes"
         )
+        run_all({
+            f"silver/{name}": functools.partial(self._silver_apply, name, df)
+            for name, df in staged.items()
+        })
 
     # -- stage 4: gold (truncate-and-reload marts) -------------------------
-    def build_gold(self) -> None:
+    def build_gold(self) -> dict[str, int]:
+        """Write every mart; returns {mart: rows written}."""
         s = {
-            n: self.spark.read.parquet(self._zone("silver", n))
+            n: self._read(self._zone("silver", n))
             for n in ("patients", "encounters", "transactions", "providers",
                       "departments", "claims")
         }
@@ -321,49 +393,53 @@ class Runner:
             "financial_metrics": gold_plans.financial_metrics(s["transactions"]),
             "payor_performance": gold_plans.payor_performance(s["claims"]),
         }
-        snapshot_versions: dict[str, int] = {}
-        for name, df in marts.items():
-            self._write_replace(df, self._zone("gold", name))
-            if self.versioned_gold:
-                # snapshot history beside the live mart: readers pin a
-                # version id for reproducible downstream runs while the
-                # truncate-reload path stays reference-faithful
-                from gcp_healthcare_data_pipeline_spark.operators.versioning import (  # noqa: PLC0415
-                    manifest_pins,
-                    prune_snapshot_manifests,
-                    write_version,
-                )
+        counts = run_all({
+            name: functools.partial(
+                self._write_replace, df, self._zone("gold", name)
+            )
+            for name, df in marts.items()
+        })
+        if self.versioned_gold:
+            # snapshot history beside the live mart: readers pin a
+            # version id for reproducible downstream runs while the
+            # truncate-reload path stays reference-faithful
+            from gcp_healthcare_data_pipeline_spark.operators.versioning import (  # noqa: PLC0415
+                manifest_pins,
+                prune_snapshot_manifests,
+                write_snapshot_manifest,
+                write_versions_concurrently,
+            )
 
-                history_root = self._zone("gold_history")
-                # GC manifests first, then honor surviving pins: version
-                # retention and manifest retention move together, so an
-                # old-but-retained run's snapshot always resolves
-                prune_snapshot_manifests(history_root, self.gold_retain)
-                v = write_version(
-                    self.spark.read.parquet(self._zone("gold", name)),
+            history_root = self._zone("gold_history")
+            # GC manifests first, then honor surviving pins: version
+            # retention and manifest retention move together, so an
+            # old-but-retained run's snapshot always resolves
+            prune_snapshot_manifests(history_root, self.gold_retain)
+            snapshot_versions = write_versions_concurrently({
+                name: (
+                    self._read(self._zone("gold", name)),
                     self._zone("gold_history", name),
-                    retain=self.gold_retain,
-                    pinned=manifest_pins(history_root, name),
+                    {
+                        "retain": self.gold_retain,
+                        "pinned": manifest_pins(history_root, name),
+                    },
                 )
-                snapshot_versions[name] = v
+                for name in marts
+            })
+            for name in marts:
                 self.logger.log(
-                    "INFO", f"gold/{name} snapshot v{v}", "gold"
+                    "INFO", f"gold/{name} snapshot v{snapshot_versions[name]}",
+                    "gold",
                 )
-        if self.versioned_gold and snapshot_versions:
             # one manifest pins ALL marts of this run to each other:
             # cross-table-consistent time travel (per-table pointers
             # alone can mix run N and N-1 for a reader mid-refresh)
-            from gcp_healthcare_data_pipeline_spark.operators.versioning import (  # noqa: PLC0415
-                write_snapshot_manifest,
-            )
-
             run_id = self.clock.strftime("%Y%m%dT%H%M%S")
-            write_snapshot_manifest(
-                self._zone("gold_history"), snapshot_versions, run_id
-            )
+            write_snapshot_manifest(history_root, snapshot_versions, run_id)
             self.logger.log(
                 "INFO", f"gold snapshot manifest {run_id}", "gold"
             )
+        return counts
 
     # -- maintenance: small-file compaction over warehouse zones -----------
     def compact_zone(
@@ -443,12 +519,7 @@ class Runner:
             self.logger.log(
                 "INFO", f"bucketized silver: {sorted(tables)}", "run"
             )
-        self.build_gold()
-        out = {}
-        for mart in ("provider_charge_summary", "patient_history",
-                     "provider_performance", "department_performance",
-                     "financial_metrics", "payor_performance"):
-            out[mart] = self.spark.read.parquet(self._zone("gold", mart)).count()
+        out = self.build_gold()
         self.logger.log("INFO", f"pipeline done: {out}", "run")
         self.ledger.flush()
         self.logger.flush()

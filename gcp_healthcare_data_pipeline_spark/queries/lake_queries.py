@@ -10,16 +10,16 @@ can assert on mtimes and directory inventories the oracle can't see).
 
 from __future__ import annotations
 
-import atexit
 import hashlib
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from gcp_healthcare_data_pipeline_spark.queries.registry import QuerySpec
+from gcp_healthcare_data_pipeline_spark.queries.registry import (
+    QuerySpec,
+    exit_tempdir,
+)
 from gcp_healthcare_data_pipeline_spark.session import load_tables
 
 
@@ -56,7 +56,7 @@ def q_version_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cutoff = F.lit("1997-01-01").cast("timestamp")
-    path = os.path.join(tempfile.mkdtemp(prefix="q_version_diff_"), "mart")
+    path = os.path.join(exit_tempdir("q_version_diff_"), "mart")
     write_version(summarize(orders.filter(F.col("o_orderdate") < cutoff)), path)
     write_version(summarize(orders), path)
     return snapshot_diff(
@@ -107,9 +107,7 @@ def q_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact,
     )
 
-    path = os.path.join(
-        tempfile.mkdtemp(prefix="q_compaction_"), "orders_frag"
-    )
+    path = os.path.join(exit_tempdir("q_compaction_"), "orders_frag")
     orders = load_tables(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -174,9 +172,7 @@ def q_jdbc_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the lazy DF stable (same-sf rewrites are deterministic no-ops).
     global _DERBY_DB  # noqa: PLW0603
     if _DERBY_DB is None:
-        root = tempfile.mkdtemp(prefix="q_jdbc_")
-        atexit.register(shutil.rmtree, root, True)
-        _DERBY_DB = os.path.join(root, "derbydb")
+        _DERBY_DB = os.path.join(exit_tempdir("q_jdbc_"), "derbydb")
     url = f"jdbc:derby:{_DERBY_DB};create=true"
     sf_tag = hashlib.sha256(
         os.path.abspath(sf_dir).encode()

@@ -36,17 +36,18 @@ to the merge, not to this particular fixture set.
 
 from __future__ import annotations
 
-import atexit
 import os
 import shutil
-import tempfile
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 
 from gcp_healthcare_data_pipeline_spark.pipeline import fixtures as FX
 from gcp_healthcare_data_pipeline_spark.plans.conform import ENTITIES, EntitySpec
-from gcp_healthcare_data_pipeline_spark.queries.registry import QuerySpec
+from gcp_healthcare_data_pipeline_spark.queries.registry import (
+    QuerySpec,
+    exit_tempdir,
+)
 
 RUN1 = datetime(2024, 6, 1, 5, 0, 0)
 RUN2 = datetime(2025, 6, 1, 5, 0, 0)
@@ -70,8 +71,6 @@ _MARTS = (
 # after a stopped session is garbage-collected, which would hand back a
 # warehouse bound to the dead session
 _CACHE: dict[str, str] = {}
-_GATE_ROOTS: list[str] = []
-atexit.register(lambda: [shutil.rmtree(r, ignore_errors=True) for r in _GATE_ROOTS])
 
 
 def _warehouse(spark: SparkSession) -> str:
@@ -84,8 +83,7 @@ def _warehouse(spark: SparkSession) -> str:
         SourcePaths,
     )
 
-    root = tempfile.mkdtemp(prefix="pipeline_gate_")
-    _GATE_ROOTS.append(root)  # removed at process exit, not leaked
+    root = exit_tempdir("pipeline_gate_")
     src, wh = os.path.join(root, "src"), os.path.join(root, "wh")
     sources = SourcePaths(**FX.write_fixtures(src))
     # small fixed-size fixtures: drop shuffle width while the pipeline runs

@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
 from collections.abc import Callable, Iterable
 from dataclasses import dataclass, field
 
@@ -16,6 +19,17 @@ _REQUIRED_CONFS = {
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.legacy.parquet.nanosAsLong": "true",
 }
+
+
+def exit_tempdir(prefix: str) -> str:
+    """A ``tempfile.mkdtemp`` work dir that is removed at process exit.
+
+    For queries whose returned frame reads its work dir lazily: removing
+    the dir on return would break the frame, and never removing it
+    leaves one dir behind per call."""
+    root = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, root, True)
+    return root
 
 
 def ensure_semantics(spark: SparkSession) -> SparkSession:

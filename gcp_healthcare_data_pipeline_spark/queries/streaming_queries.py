@@ -20,7 +20,10 @@ from gcp_healthcare_data_pipeline_spark.queries.dedup_queries import (
     # screen's oracle IS the batch incremental screen's, verbatim
     _ORACLE_DEDUP_INCREMENTAL as _ORACLE_STREAM_TEXT_DEDUP,
 )
-from gcp_healthcare_data_pipeline_spark.queries.registry import QuerySpec
+from gcp_healthcare_data_pipeline_spark.queries.registry import (
+    QuerySpec,
+    exit_tempdir,
+)
 from gcp_healthcare_data_pipeline_spark.queries.vector_queries import (
     # the streaming screen's oracle IS the batch incremental screen's:
     # micro-batched delivery against frozen standing state changes
@@ -535,14 +538,12 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     event_id). The batch arg-max twin is the oracle; replay-idempotence
     and crash semantics are pinned in tests/test_streaming_sinks.py.
     """
-    import tempfile  # noqa: PLC0415
-
     from gcp_healthcare_data_pipeline_spark.streaming.sinks import (  # noqa: PLC0415
         read_upsert_target,
         stream_upsert_to_parquet,
     )
 
-    work = tempfile.mkdtemp(prefix="q_stream_upsert_")
+    work = exit_tempdir("q_stream_upsert_")
     ev = read_events_stream(spark, sf_dir)
     stream = ev.select(
         "user_id", "event_id", "event_type", "value",
@@ -584,13 +585,12 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
 
     from gcp_healthcare_data_pipeline_spark.streaming.backfill import (  # noqa: PLC0415
         run_incremental,
     )
 
-    work = tempfile.mkdtemp(prefix="q_stream_backfill_")
+    work = exit_tempdir("q_stream_backfill_")
     src = os.path.join(work, "src")
     os.makedirs(src)
     ev = load_tables(spark, sf_dir, "events").select(
@@ -651,7 +651,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
-    import tempfile  # noqa: PLC0415
     from datetime import datetime, timedelta  # noqa: PLC0415
 
     from gcp_healthcare_data_pipeline_spark.streaming.sinks import (  # noqa: PLC0415
@@ -659,7 +658,7 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_scd2_to_parquet,
     )
 
-    work = tempfile.mkdtemp(prefix="q_stream_scd2_")
+    work = exit_tempdir("q_stream_scd2_")
     src = os.path.join(work, "src")
     os.makedirs(src)
     cust = load_tables(spark, sf_dir, "customer").select(

@@ -1,6 +1,8 @@
-"""Tests for ``tools/measure.py``: the A/B aggregation (pure, no Spark)
-and one ``profile`` run end to end in its own process."""
+"""Tests for ``tools/measure.py``: the A/B aggregation (pure, no Spark),
+the span hooks it shares with ``perfbench/layers.py``, and one
+``profile`` run end to end in its own process."""
 
+import importlib
 import json
 import os
 import subprocess
@@ -11,6 +13,8 @@ sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import pytest  # noqa: E402
 from measure import PROFILE_FIELDS, ab_summary, copy_levels  # noqa: E402
+
+import layers  # noqa: E402  (perfbench/, put on sys.path by measure)
 
 
 def test_ab_medians_ratios_and_geomean():
@@ -56,6 +60,30 @@ def test_ab_no_common_queries():
     s = ab_summary({"q_a": [1.0]}, {"q_b": [1.0]})
     assert s["n_common"] == 0
     assert s["geomean_ratio"] is None and s["median_ratio"] is None
+
+
+def test_trace_hooks_resolve_and_restore():
+    """Every method the traced run wraps is still defined on the class it
+    is looked up on (a renamed or moved one fails every ``--trace 1`` run
+    with a KeyError), and the undo puts every original back. No Spark
+    session is started."""
+
+    def targets():
+        return {
+            (cls_name, name): vars(getattr(
+                importlib.import_module(f"{layers.PACKAGE}.{mod}"), cls_name
+            ))[name]
+            for _, mod, cls_name, name in layers._METHOD_TARGETS
+        }
+
+    before = targets()
+    restore = layers.install(layers.Tracer())
+    try:
+        wrapped = targets()
+    finally:
+        restore()
+    assert all(wrapped[k] is not fn for k, fn in before.items())
+    assert targets() == before
 
 
 def test_copy_levels_compose_at_most_ten_per_level():
