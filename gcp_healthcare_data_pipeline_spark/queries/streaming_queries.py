@@ -9,8 +9,8 @@ tests/test_streaming.py and tests/test_stateful_streaming.py.
 
 from __future__ import annotations
 
-import uuid
-from contextlib import contextmanager
+import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,6 +31,10 @@ from gcp_healthcare_data_pipeline_spark.queries.vector_queries import (
     _ORACLE_SEMDEDUP_INCREMENTAL as _ORACLE_STREAM_SEMDEDUP,
 )
 from gcp_healthcare_data_pipeline_spark.session import event_ts_us, load_tables
+from gcp_healthcare_data_pipeline_spark.streaming.drain import (
+    drain,
+    run_available,
+)
 from gcp_healthcare_data_pipeline_spark.streaming.stateful import (
     running_user_profiles,
 )
@@ -42,54 +46,17 @@ from gcp_healthcare_data_pipeline_spark.streaming.windows import (
 )
 
 
-# Stateful-operator width for the drains. Every stateful streaming
-# stage (windowed agg, dropDuplicates, stream-stream join) allocates
-# one state store PER shuffle partition PER stateful operator — and the
-# partition count is frozen into the checkpoint at first batch. At the
-# session's batch width (32) the two stream-stream joins spent ~12 s
-# each just initializing/committing 32x4 join state stores for a
-# 60-row result; at 8 the same drains run 3-4 s with IDENTICAL output
-# (r14 verdict item 7, A/B-measured). Production discipline, not a
-# bench trick: state width is sized to stream key cardinality and
-# throughput, independently of batch shuffle width — this constant is
-# that knob. The post-drain BATCH aggregations plan after the width is
-# restored, so they keep the session's full parallelism.
-_STATE_PARTITIONS = 8
-
-
-@contextmanager
-def _state_width(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to ``_STATE_PARTITIONS``
-    for the duration of a stream drain (restored on every exit)."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(_STATE_PARTITIONS))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def _drain(
-    stream_df: DataFrame, spark: SparkSession, mode: str = "update"
-) -> DataFrame:
-    name = f"q_stream_{uuid.uuid4().hex[:10]}"
-    with _state_width(spark):
-        q = (
-            stream_df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
+def _land(stage: str, src: str, tag: str) -> None:
+    """Move the parquet part files Spark wrote under ``stage`` into the
+    watched dir ``src`` as ``<tag>_<i>.parquet``, then drop ``stage``.
+    New files must appear in the watched dir's root: file-stream sources
+    don't recurse into non-partition subdirs."""
+    parts = sorted(f for f in os.listdir(stage) if f.endswith(".parquet"))
+    for i, f in enumerate(parts):
+        shutil.move(
+            os.path.join(stage, f), os.path.join(src, f"{tag}_{i}.parquet")
         )
-        q.awaitTermination()
-    # copy the drained rows out of the memory sink and DROP its table:
-    # the sink registration is permanent otherwise, so a long session
-    # (the 600-cell --all-sf sweep) accumulates one pinned result table
-    # per drain until the heap dies — the checkpoint blocks, unlike the
-    # sink table, are released when the returned frame is GC'd
-    out = spark.sql(f"SELECT * FROM {name}").localCheckpoint(eager=True)
-    spark.catalog.dropTempView(name)
-    return out
+    shutil.rmtree(stage, ignore_errors=True)
 
 
 def q_stream_stateful_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -97,7 +64,7 @@ def q_stream_stateful_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state (== the batch aggregate for a bounded input)."""
     ev = read_events_stream(spark, sf_dir)
     ev = ev.withColumn("ts_us", event_ts_us(ev))
-    out = _drain(running_user_profiles(ev), spark)
+    out = drain(running_user_profiles(ev))
     # keep only each user's final emission (update-mode sinks append one
     # row per micro-batch that touched the key)
     w = Window.partitionBy("user_id").orderBy(F.col("n_events").desc())
@@ -122,7 +89,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming tumbling-window aggregation drained to completion;
     windows exported as epoch seconds for the compare."""
     ev = read_events_stream(spark, sf_dir)
-    out = _drain(tumbling_counts(ev), spark)
+    out = drain(tumbling_counts(ev))
     return out.select(
         F.unix_timestamp("window_start").cast("bigint").alias("bucket_start"),
         "event_type",
@@ -147,7 +114,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     5 min — each event lands in two overlapping windows), drained in
     complete mode so the sink holds the final full window state."""
     ev = read_events_stream(spark, sf_dir)
-    out = _drain(sliding_rates(ev), spark, mode="complete")
+    out = drain(sliding_rates(ev), mode="complete")
     return out.select(
         F.unix_timestamp("window_start").cast("bigint").alias("window_start"),
         "n_events",
@@ -183,7 +150,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     sessionization defines the same sessions, so its SQL is the oracle:
     session start = first event, end = last event + gap."""
     ev = read_events_stream(spark, sf_dir)
-    out = _drain(session_aggregates(ev), spark, mode="complete")
+    out = drain(session_aggregates(ev), mode="complete")
     return out.select(
         "user_id",
         F.unix_timestamp("session_start").cast("bigint").alias("start_s"),
@@ -240,7 +207,7 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = deduped.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_unique_events")
     )
-    out = _drain(agg, spark)
+    out = drain(agg)
     # update-mode sink: keep each type's final (largest) count emission
     w = Window.partitionBy("event_type").orderBy(
         F.col("n_unique_events").desc()
@@ -281,7 +248,7 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.round(F.sum("value"), 2).alias("total_value"),
     )
-    out = _drain(agg, spark)
+    out = drain(agg)
     w = Window.partitionBy("segment").orderBy(F.col("n_events").desc())
     return (
         out.withColumn("_rn", F.row_number().over(w))
@@ -338,7 +305,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "inner",
     )
-    out = _drain(joined, spark, mode="append")
+    out = drain(joined, mode="append")
     return out.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_pairs"),
         F.round(F.sum("buy_value"), 2).alias("total_attr_value"),
@@ -405,7 +372,7 @@ def q_stream_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "leftOuter",
     )
-    out = _drain(joined, spark, mode="append")
+    out = drain(joined, mode="append")
     batch_ev = spark.read.parquet(f"{sf_dir}/events.parquet")
     from gcp_healthcare_data_pipeline_spark.session import (  # noqa: PLC0415
         event_time_col,
@@ -496,7 +463,7 @@ def q_stream_timeout_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withWatermark("event_time", "1 minute")
         .select("user_id", "value", "ts_us", "event_time")
     )
-    out = _drain(profiles_on_timeout(stream), spark, mode="append")
+    out = drain(profiles_on_timeout(stream), mode="append")
     batch = spark.read.parquet(f"{sf_dir}/events.parquet")
     t = event_time_col(batch)
     stable_users = (
@@ -583,9 +550,6 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts and break the hash match. Restart-loss and idle-rerun
     contracts are pinned in tests/test_stream_backfill.py.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
-
     from gcp_healthcare_data_pipeline_spark.streaming.backfill import (  # noqa: PLC0415
         run_incremental,
     )
@@ -596,27 +560,12 @@ def q_stream_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_tables(spark, sf_dir, "events").select(
         "event_id", "user_id", "value"
     )
-
-    def land(df: DataFrame, tag: str) -> None:
-        """New files appear in the watched dir root (file-stream sources
-        don't recurse into non-partition subdirs)."""
-        stage = os.path.join(work, f"stage_{tag}")
-        df.write.mode("overwrite").parquet(stage)
-        i = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(stage, f),
-                    os.path.join(src, f"{tag}_{i}.parquet"),
-                )
-                i += 1
-        shutil.rmtree(stage, ignore_errors=True)
-
+    stage = os.path.join(work, "stage")
     sink, ckpt = os.path.join(work, "sink"), os.path.join(work, "ckpt")
-    land(ev.filter(F.col("event_id") % 2 == 0), "b1")
-    run_incremental(spark, src, sink, ckpt, ev.schema)
-    land(ev.filter(F.col("event_id") % 2 == 1), "b2")
-    run_incremental(spark, src, sink, ckpt, ev.schema)
+    for tag, parity in (("b1", 0), ("b2", 1)):
+        ev.filter(F.col("event_id") % 2 == parity).write.parquet(stage)
+        _land(stage, src, tag)
+        run_incremental(spark, src, sink, ckpt, ev.schema)
     return (
         spark.read.parquet(sink)
         .groupBy("user_id")
@@ -649,8 +598,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same end state directly; replay-idempotence and crash recovery
     are pinned in tests/test_streaming_sinks.py.
     """
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
     from datetime import datetime, timedelta  # noqa: PLC0415
 
     from gcp_healthcare_data_pipeline_spark.streaming.sinks import (  # noqa: PLC0415
@@ -666,33 +613,6 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("segment"),
         F.col("c_acctbal").alias("acctbal"),
     )
-
-    def land(df: DataFrame, tag: str) -> None:
-        stage = os.path.join(work, f"stage_{tag}")
-        df.write.mode("overwrite").parquet(stage)
-        i = 0
-        for f in sorted(os.listdir(stage)):
-            if f.endswith(".parquet"):
-                shutil.move(
-                    os.path.join(stage, f),
-                    os.path.join(src, f"{tag}_{i}.parquet"),
-                )
-                i += 1
-        shutil.rmtree(stage, ignore_errors=True)
-
-    def drain() -> None:
-        stream = (
-            spark.readStream.schema(cust.schema).parquet(src)
-        )
-        stream_scd2_to_parquet(
-            stream,
-            os.path.join(work, "target"),
-            ["customer_key"],
-            ["segment", "acctbal"],
-            lambda bid: datetime(2025, 1, 1) + timedelta(days=bid),
-            os.path.join(work, "ckpt"),
-        )
-
     changed = cust.filter(F.col("customer_key") % 3 == 0).select(
         "customer_key",
         F.concat(F.col("segment"), F.lit(" rev2")).alias("segment"),
@@ -701,10 +621,18 @@ def q_stream_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged = cust.filter(
         (F.col("customer_key") % 5 == 0) & (F.col("customer_key") % 3 != 0)
     )
-    land(cust, "b1")
-    drain()
-    land(changed.unionByName(unchanged), "b2")
-    drain()
+    stage = os.path.join(work, "stage")
+    for tag, batch in (("b1", cust), ("b2", changed.unionByName(unchanged))):
+        batch.write.parquet(stage)
+        _land(stage, src, tag)
+        stream_scd2_to_parquet(
+            spark.readStream.schema(cust.schema).parquet(src),
+            os.path.join(work, "target"),
+            ["customer_key"],
+            ["segment", "acctbal"],
+            lambda bid: datetime(2025, 1, 1) + timedelta(days=bid),
+            os.path.join(work, "ckpt"),
+        )
     return read_upsert_target(spark, os.path.join(work, "target")).select(
         "customer_key",
         "segment",
@@ -756,8 +684,6 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     state are the SAME definitions the batch queries use
     (vector_queries._semdedup_screen/_route_batch/
     standing_semdedup_tables) — one definition, zero drift."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from gcp_healthcare_data_pipeline_spark.functions.vectors import (  # noqa: PLC0415
@@ -806,15 +732,7 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(stage)
         )
         for tag, sub in (("even", "_mb=true"), ("odd", "_mb=false")):
-            i = 0
-            subdir = os.path.join(stage, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(subdir, f),
-                        os.path.join(src, f"{tag}_{i}.parquet"),
-                    )
-                    i += 1
+            _land(os.path.join(stage, sub), src, tag)
         shutil.rmtree(stage, ignore_errors=True)
 
         sink = os.path.join(work, "sink")
@@ -829,14 +747,11 @@ def q_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             ba = _route_batch(bdf.select("vec_id", "v"), centroids, m_frame)
             _semdedup_screen(ba, survivors).write.mode("append").parquet(sink)
 
-        with _state_width(spark):
-            q = (
-                stream.writeStream.foreachBatch(_screen_batch)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_available(
+            spark,
+            stream.writeStream.foreachBatch(_screen_batch)
+            .option("checkpointLocation", os.path.join(work, "ckpt")),
+        )
         # pin the result in executor memory before the finally reclaims
         # the work dir (landed delta + checkpoint + sink would otherwise
         # persist per call for the machine's lifetime — review finding)
@@ -865,8 +780,6 @@ def q_stream_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_dedup_incremental's, verbatim. Screen body, epoch params and
     standing state are the SAME definitions the batch queries use —
     one definition, zero drift."""
-    import os  # noqa: PLC0415
-    import shutil  # noqa: PLC0415
     import tempfile  # noqa: PLC0415
 
     from gcp_healthcare_data_pipeline_spark.queries.dedup_queries import (  # noqa: PLC0415
@@ -916,15 +829,7 @@ def q_stream_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(stage)
         )
         for tag, sub in (("even", "_mb=true"), ("odd", "_mb=false")):
-            i = 0
-            subdir = os.path.join(stage, sub)
-            for f in sorted(os.listdir(subdir)):
-                if f.endswith(".parquet"):
-                    shutil.move(
-                        os.path.join(subdir, f),
-                        os.path.join(src, f"{tag}_{i}.parquet"),
-                    )
-                    i += 1
+            _land(os.path.join(stage, sub), src, tag)
         shutil.rmtree(stage, ignore_errors=True)
 
         sink = os.path.join(work, "sink")
@@ -940,14 +845,11 @@ def q_stream_text_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 sink
             )
 
-        with _state_width(spark):
-            q = (
-                stream.writeStream.foreachBatch(_screen_batch)
-                .option("checkpointLocation", os.path.join(work, "ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        run_available(
+            spark,
+            stream.writeStream.foreachBatch(_screen_batch)
+            .option("checkpointLocation", os.path.join(work, "ckpt")),
+        )
         # pin the result before the finally reclaims the work dir
         return spark.read.parquet(sink).localCheckpoint(eager=True)
     finally:

@@ -25,6 +25,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from gcp_healthcare_data_pipeline_spark.streaming.drain import run_available
+
 
 def run_incremental(
     spark: SparkSession,
@@ -54,15 +56,13 @@ def run_incremental(
     df = reader.load(source_dir)
     if transform is not None:
         df = transform(df)
-    q = (
+    run_available(
+        spark,
         df.writeStream.format("parquet")
         .option("path", sink_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
     # recentProgress is not reliably retained after termination; the
     # sink delta is the ground truth for "rows processed this pass"
     return spark.read.parquet(sink_dir).count() - before

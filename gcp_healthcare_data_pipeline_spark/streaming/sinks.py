@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gcp_healthcare_data_pipeline_spark.streaming.drain import run_available
+
 
 def _ledger_path(target_dir: str) -> str:
     return os.path.join(target_dir, "_ledger")
@@ -75,6 +77,24 @@ def last_committed_batch(target_dir: str) -> int:
         return -1
 
 
+def _commit(merged: DataFrame, batch_id: int, target_dir: str) -> None:
+    """Make ``merged`` the target's state and record ``batch_id``.
+
+    ``merged`` is materialized BEFORE the live dir is touched; then a
+    crash-recoverable two-rename swap: the committed state is never
+    destroyed until the new state is live AND the ledger records the
+    batch (recover_target repairs every intermediate crash point)."""
+    data_dir, old_dir, tmp_dir = _data_dirs(target_dir)
+    merged.write.mode("overwrite").parquet(tmp_dir)
+    if os.path.exists(data_dir):
+        os.rename(data_dir, old_dir)
+    os.replace(tmp_dir, data_dir)
+    with open(_ledger_path(target_dir), "w") as fh:
+        fh.write(str(batch_id))
+    if os.path.exists(old_dir):
+        shutil.rmtree(old_dir)
+
+
 def upsert_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -98,7 +118,7 @@ def upsert_batch(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    data_dir, old_dir, tmp_dir = _data_dirs(target_dir)
+    data_dir = _data_dirs(target_dir)[0]
     if os.path.exists(data_dir):
         current = spark.read.parquet(data_dir)
         merged = current.join(
@@ -106,18 +126,7 @@ def upsert_batch(
         ).unionByName(latest)
     else:
         merged = latest
-    # materialize BEFORE touching the live dir; then a crash-recoverable
-    # two-rename swap: the committed state is never destroyed until the
-    # new state is live AND the ledger records the batch (recover_target
-    # repairs every intermediate crash point)
-    merged.write.mode("overwrite").parquet(tmp_dir)
-    if os.path.exists(data_dir):
-        os.rename(data_dir, old_dir)
-    os.replace(tmp_dir, data_dir)
-    with open(_ledger_path(target_dir), "w") as fh:
-        fh.write(str(batch_id))
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
+    _commit(merged, batch_id, target_dir)
     return True
 
 
@@ -135,13 +144,11 @@ def stream_upsert_to_parquet(
     def _sink(df: DataFrame, bid: int) -> None:
         upsert_batch(df, bid, target_dir, key_cols, order_col)
 
-    q = (
+    run_available(
+        stream_df.sparkSession,
         stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
     )
-    q.awaitTermination()
 
 
 def read_upsert_target(spark: SparkSession, target_dir: str) -> DataFrame:
@@ -191,7 +198,7 @@ def apply_scd2_batch(
             .drop("_rn")
         )
     ts = F.lit(batch_ts(batch_id)).cast("timestamp")
-    data_dir, old_dir, tmp_dir = _data_dirs(target_dir)
+    data_dir = _data_dirs(target_dir)[0]
     if os.path.exists(data_dir):
         target = spark.read.parquet(data_dir)
         merged = scd2_merge(
@@ -205,14 +212,7 @@ def apply_scd2_batch(
         )
     else:
         merged = scd2_initial(batch_df, ts)
-    merged.write.mode("overwrite").parquet(tmp_dir)
-    if os.path.exists(data_dir):
-        os.rename(data_dir, old_dir)
-    os.replace(tmp_dir, data_dir)
-    with open(_ledger_path(target_dir), "w") as fh:
-        fh.write(str(batch_id))
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
+    _commit(merged, batch_id, target_dir)
     return True
 
 
@@ -235,10 +235,8 @@ def stream_scd2_to_parquet(
             **scd2_opts,
         )
 
-    q = (
+    run_available(
+        stream_df.sparkSession,
         stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        .option("checkpointLocation", checkpoint_dir),
     )
-    q.awaitTermination()

@@ -104,16 +104,3 @@ def session_aggregates(
         )
     )
 
-
-def run_to_completion(stream_df: DataFrame, query_name: str) -> DataFrame:
-    """Drain the stream with an availableNow trigger into a memory sink
-    and return the materialized result (test/bench harness path)."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(query_name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return stream_df.sparkSession.sql(f"SELECT * FROM {query_name}")

@@ -21,9 +21,9 @@ from gcp_healthcare_data_pipeline_spark.queries.event_queries import (
     q_events_tumbling,
 )
 from gcp_healthcare_data_pipeline_spark.session import event_ts_us
+from gcp_healthcare_data_pipeline_spark.streaming.drain import drain
 from gcp_healthcare_data_pipeline_spark.streaming.windows import (
     read_events_stream,
-    run_to_completion,
     tumbling_counts,
 )
 
@@ -111,7 +111,7 @@ def test_streaming_reader_identical_across_encodings(spark, encoded_dirs):
     results = {}
     for name, d in encoded_dirs.items():
         ev = read_events_stream(spark, d)
-        out = run_to_completion(tumbling_counts(ev), f"enc_{name}")
+        out = drain(tumbling_counts(ev), mode="complete")
         results[name] = sorted(map(tuple, out.collect()))
     assert results["nanos"] == results["micros_ntz"] == results["micros_utc"]
     assert len(results["nanos"]) > 3

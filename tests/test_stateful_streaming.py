@@ -76,13 +76,11 @@ def test_event_time_timeout_flushes_each_key_once(spark):
     by design."""
     from pyspark.sql import functions as F
 
-    from gcp_healthcare_data_pipeline_spark.queries.streaming_queries import (
-        _drain,
-    )
     from gcp_healthcare_data_pipeline_spark.session import (
         event_time_col,
         event_ts_us,
     )
+    from gcp_healthcare_data_pipeline_spark.streaming.drain import drain
     from gcp_healthcare_data_pipeline_spark.streaming.stateful import (
         profiles_on_timeout,
     )
@@ -97,7 +95,7 @@ def test_event_time_timeout_flushes_each_key_once(spark):
         .withWatermark("event_time", "1 minute")
         .select("user_id", "value", "ts_us", "event_time")
     )
-    out = _drain(profiles_on_timeout(stream), spark, mode="append")
+    out = drain(profiles_on_timeout(stream), mode="append")
     got = {r.user_id: (r.n_events, r.total_value) for r in out.collect()}
     # exactly-once per emitted key
     assert len(got) == out.count()

@@ -12,7 +12,12 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, os.path.join(ROOT, "tools"))
 
 import pytest  # noqa: E402
-from measure import PROFILE_FIELDS, ab_summary, copy_levels  # noqa: E402
+from measure import (  # noqa: E402
+    PROFILE_FIELDS,
+    ab_summary,
+    copy_levels,
+    profile_queries,
+)
 
 import layers  # noqa: E402  (perfbench/, put on sys.path by measure)
 
@@ -110,12 +115,22 @@ def test_no_tracked_python_file_names_this_checkout():
     assert proc.stdout == ""
 
 
+def test_profile_runs_stream_drains_only_when_named():
+    default = profile_queries([])
+    assert "q_charge_summary" in default
+    assert not [n for n in default if n.startswith("q_stream_")]
+    named = profile_queries(["q_stream_tumbling", "q_charge_summary"])
+    assert list(named) == ["q_stream_tumbling", "q_charge_summary"]
+    with pytest.raises(SystemExit):
+        profile_queries(["q_pipeline_provider_charge_summary"])
+
+
 def test_profile_reports_every_field(tmp_path):
     out = tmp_path / "profile.json"
     proc = subprocess.run(
         [sys.executable, os.path.join(ROOT, "tools", "measure.py"),
-         "profile", "q_charge_summary", "--sf", "/root/testdata/sf0.001",
-         "--out", str(out)],
+         "profile", "q_charge_summary", "q_stream_tumbling",
+         "--sf", "/root/testdata/sf0.001", "--out", str(out)],
         capture_output=True, text=True, timeout=900,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
@@ -130,3 +145,8 @@ def test_profile_reports_every_field(tmp_path):
     assert q["construct_s"] > 0 and q["execute_s"] > 0
     assert q["spark.jobs"] >= 1 and q["spark.stages"] >= 1
     assert 0.0 <= q["functions.codegen_share"] <= 1.0
+    # a named drain is profiled like a batch query; it drains while its
+    # frame is built
+    s = doc["queries"]["q_stream_tumbling"]
+    assert set(s) == set(PROFILE_FIELDS)
+    assert s["rows"] > 0 and s["construct_jobs"] >= 1

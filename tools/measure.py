@@ -4,10 +4,11 @@
     python tools/measure.py ab --base <sha> [--runs 3] [--out FILE]
     python tools/measure.py scale query ... [--sf DIR] [--copies 10] [--threshold 18] [--out FILE]
 
-``profile`` runs each named batch registry query (default: all of them)
-the way ``bench.py`` does, after the same warm-up: ``clear_shared_state()``,
-then ``QuerySpec.fn`` (``construct_s``, which includes any eager jobs the
-query runs while it builds its frames), then ``.count()``
+``profile`` runs each named registry query (default: every batch query;
+``q_stream_*`` drains run only when named) the way ``bench.py`` does,
+after the same warm-up: ``clear_shared_state()``, then ``QuerySpec.fn``
+(``construct_s``, which includes any eager jobs the query runs while it
+builds its frames, a drain's whole stream among them), then ``.count()``
 (``execute_s``). Spark's local event log is kept for the whole session
 and, once the session stops, each query's jobs, stages, tasks, shuffle,
 spill and ``functions.codegen_share`` are read from it by the query's
@@ -202,12 +203,24 @@ def _engine_meta() -> dict:
 # -- profile ---------------------------------------------------------------
 
 
-def cmd_profile(args) -> tuple[dict, int]:
+def profile_queries(names: list[str]) -> dict:
+    """``profile``'s queries: the named batch queries and ``q_stream_*``
+    drains, or every batch query when none is named."""
+    from gcp_healthcare_data_pipeline_spark.queries import all_queries  # noqa: PLC0415
+
     specs = batch_queries()
-    names = args.names or list(specs)
+    if not names:
+        return specs
+    specs.update((n, s) for n, s in all_queries().items()
+                 if n.startswith("q_stream_"))
     unknown = [n for n in names if n not in specs]
     if unknown:
-        raise SystemExit(f"not batch registry queries: {unknown}")
+        raise SystemExit(f"not batch queries or q_stream_* drains: {unknown}")
+    return {n: specs[n] for n in names}
+
+
+def cmd_profile(args) -> tuple[dict, int]:
+    specs = profile_queries(args.names)
 
     def body(spark, tracer):
         from bench import _vector_warmup  # noqa: PLC0415
@@ -219,8 +232,8 @@ def cmd_profile(args) -> tuple[dict, int]:
             "r_name").count().collect()
         _vector_warmup(spark, args.sf)
         runs = {}
-        for name in names:
-            runs[name] = run_query(spark, tracer, specs[name], args.sf)
+        for name, spec in specs.items():
+            runs[name] = run_query(spark, tracer, spec, args.sf)
             r = runs[name]
             print(f"# {name}: {r['construct_s']:.3f}s + {r['execute_s']:.3f}s"
                   f" {r.get('error', '')}", file=sys.stderr, flush=True)
@@ -508,7 +521,8 @@ def main(argv=None) -> int:
     sub = ap.add_subparsers(dest="cmd", required=True)
     p = sub.add_parser("profile", help="per-query time, jobs, shuffle, "
                        "spill and codegen share")
-    p.add_argument("names", nargs="*", help="batch queries (default: all)")
+    p.add_argument("names", nargs="*", help="batch queries or q_stream_* "
+                   "drains (default: every batch query)")
     p.add_argument("--sf", default=DEFAULT_SF)
     p.add_argument("--explain", metavar="DIR",
                    help="write each query's executed plans to DIR/<query>.txt")
