@@ -1,8 +1,8 @@
 """Run a stream to completion: every drain in the engine goes through here.
 
 A drain starts its writer with an ``availableNow`` trigger (process
-everything pending, then stop), waits for it, and does so at the state
-width (:func:`state_width`). :func:`drain` is the memory-sink form the
+everything pending, then stop) at the state width and waits for it
+(:func:`run_available`). :func:`drain` is the memory-sink form the
 queries and tests read results from; foreachBatch and file sinks pass
 their configured writer to :func:`run_available`.
 """
@@ -10,7 +10,6 @@ their configured writer to :func:`run_available`.
 from __future__ import annotations
 
 import uuid
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter
@@ -31,24 +30,18 @@ from pyspark.sql.streaming import DataStreamWriter
 _STATE_PARTITIONS = 8
 
 
-@contextmanager
-def state_width(spark: SparkSession):
-    """Scope ``spark.sql.shuffle.partitions`` to the session's width
-    capped at ``_STATE_PARTITIONS`` (restored on every exit)."""
+def run_available(spark: SparkSession, writer: DataStreamWriter) -> None:
+    """Start ``writer`` with an availableNow trigger and wait until it has
+    processed everything pending, with ``spark.sql.shuffle.partitions``
+    scoped to the session's width capped at ``_STATE_PARTITIONS``
+    (restored on every exit)."""
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     width = min(_STATE_PARTITIONS, int(prev))
     spark.conf.set("spark.sql.shuffle.partitions", str(width))
     try:
-        yield
+        writer.trigger(availableNow=True).start().awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-
-def run_available(spark: SparkSession, writer: DataStreamWriter) -> None:
-    """Start ``writer`` with an availableNow trigger at the state width
-    and wait until it has processed everything pending."""
-    with state_width(spark):
-        writer.trigger(availableNow=True).start().awaitTermination()
 
 
 def drain(stream_df: DataFrame, mode: str = "update") -> DataFrame:
